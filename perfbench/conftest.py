@@ -1,0 +1,4 @@
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "smoke: runs the benchmark end to end at sf0.001"
+    )
