@@ -18,11 +18,12 @@ end to end against the engine's own aggregates.
 
 from __future__ import annotations
 
-import http.server
 import threading
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from apache_nifi_spark.streaming.wire_server import HttpHandler, HttpServer, WireOwner
 
 __all__ = ["escape_label", "render_exposition", "MetricsEndpoint"]
 
@@ -82,7 +83,7 @@ def render_exposition(
     return headers.unionByName(samples)
 
 
-class MetricsEndpoint:
+class MetricsEndpoint(WireOwner):
     """The scrape half: ``GET /metrics`` serves the last published
     exposition body with the standard content type."""
 
@@ -91,12 +92,9 @@ class MetricsEndpoint:
         self._lock = threading.Lock()
         endpoint = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            # keep-alive (see streaming/listen.py); the bodyless 404
-            # needs an explicit zero Content-Length under HTTP/1.1 (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(HttpHandler):
+            # the bodyless 404 needs an explicit zero Content-Length
+            # under HTTP/1.1 keep-alive
             def do_GET(self):  # noqa: N802 (stdlib API name)
                 if self.path != "/metrics":
                     self.send_response(404)
@@ -111,12 +109,7 @@ class MetricsEndpoint:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def log_message(self, *args):  # silence per-request stderr
-                pass
-
-        self._srv = http.server.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._srv.serve_forever, daemon=True)
-        self._thread.start()
+        self._srv = HttpServer(Handler, host, port).start()
 
     @property
     def url(self) -> str:
@@ -130,7 +123,3 @@ class MetricsEndpoint:
         body = ("\n".join(r["line"] for r in rows) + "\n").encode()
         with self._lock:
             self._body = body
-
-    def stop(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()

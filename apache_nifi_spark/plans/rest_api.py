@@ -102,7 +102,6 @@ from __future__ import annotations
 import functools
 import hmac
 import http.client
-import http.server
 import json
 import os
 import re
@@ -115,6 +114,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from apache_nifi_spark.plans.flow_import import FlowImportError, run_flow
 from apache_nifi_spark.plans.flow_registry import FlowRegistry
+from apache_nifi_spark.streaming.wire_server import HttpHandler, HttpServer
 
 __all__ = [
     "NiFiApiServer",
@@ -236,12 +236,7 @@ class NiFiApiServer:
 
         api = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            protocol_version = "HTTP/1.1"
-
-            def log_message(self, *a):  # quiet
-                pass
-
+        class Handler(HttpHandler):
             def _body(self) -> dict:
                 n = int(self.headers.get("Content-Length") or 0)
                 raw = self.rfile.read(n) if n else b""
@@ -313,9 +308,7 @@ class NiFiApiServer:
             def do_DELETE(self):
                 self._route("DELETE")
 
-        self._server = http.server.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
+        self._server = HttpServer(Handler, host, port).start()
 
     # ------------------------------------------------------------ control --
 
@@ -349,8 +342,7 @@ class NiFiApiServer:
             return dict(self._outputs[group_id])
 
     def stop(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
+        self._server.stop()
 
     # ---------------------------------------------------------- revisions --
 

@@ -308,10 +308,13 @@ def _basket_pair_counts(items, directed: bool):
         F.min("item").alias("lo"), F.max("item").alias("hi")
     ).first()  # control-plane: one row off the pinned frame
     if b["lo"] is not None and b["lo"] >= 0 and b["hi"] < _PACK_ID_MAX:
+        # bigint before the shift: on an int column Spark takes the
+        # shift count mod 32, so shiftleft(a, 32) would be a itself and
+        # distinct pairs would collide (a + b)
         inner = (
-            "array(shiftleft(a, 32) + b, shiftleft(b, 32) + a)"
+            "array(shiftleft(bigint(a), 32) + b, shiftleft(bigint(b), 32) + a)"
             if directed
-            else "shiftleft(a, 32) + b"
+            else "shiftleft(bigint(a), 32) + b"
         )
         flat = "flatten" if directed else ""
         return (

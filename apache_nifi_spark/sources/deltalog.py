@@ -68,11 +68,6 @@ def _last_checkpoint_pointer(log_dir: str) -> dict | None:
         return json.loads(f.read())
 
 
-def _last_checkpoint_version(log_dir: str) -> int | None:
-    ptr = _last_checkpoint_pointer(log_dir)
-    return None if ptr is None else int(ptr["version"])
-
-
 def write_checkpoint(
     spark: SparkSession, table_path: str, version: int
 ) -> str:

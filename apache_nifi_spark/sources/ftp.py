@@ -30,9 +30,10 @@ import io as _io
 import os
 import socket
 import socketserver
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
+
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
 
 __all__ = ["MiniFtpServer", "list_ftp", "fetch_ftp", "put_ftp"]
 
@@ -41,10 +42,6 @@ __all__ = ["MiniFtpServer", "list_ftp", "fetch_ftp", "put_ftp"]
 
 class _FtpHandler(socketserver.StreamRequestHandler):
     """One FTP control connection (RFC 959 subset, passive mode only)."""
-
-    # control channel is chatty small writes; never let Nagle queue a
-    # reply behind an unACKed one (see streaming/listen.py; r17)
-    disable_nagle_algorithm = True
 
     def _reply(self, code: int, text: str) -> None:
         self.wfile.write(f"{code} {text}\r\n".encode())
@@ -152,23 +149,15 @@ class _FtpHandler(socketserver.StreamRequestHandler):
                 self._reply(550, "outside root")
 
 
-class MiniFtpServer:
+class MiniFtpServer(WireOwner):
     """In-process FTP daemon over a root directory (threaded, PASV)."""
 
     def __init__(self, root: str):
         self.root = os.path.abspath(root)
         os.makedirs(self.root, exist_ok=True)
-        self._srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _FtpHandler)
-        self._srv.daemon_threads = True
+        self._srv = TcpServer(_FtpHandler)
         self._srv.root = self.root  # type: ignore[attr-defined]
-        threading.Thread(target=self._srv.serve_forever, daemon=True).start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.server_address[1]
-
-    def close(self) -> None:
-        self._srv.shutdown()
+        self._srv.start()
 
 
 # ----------------------------------------------------------- operators -----

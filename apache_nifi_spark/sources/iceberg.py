@@ -654,15 +654,6 @@ def _load_metadata(table_path: str) -> dict:
         return json.load(f)
 
 
-def _manifest_list_paths(
-    table_path: str, snapshot_id: int | None
-) -> list[str]:
-    """Control-plane: version hint → metadata JSON → the snapshot's
-    manifest-list Avro → manifest paths (O(manifests) rows)."""
-    meta = _load_metadata(table_path)
-    return _manifest_list_paths_from(meta, snapshot_id)
-
-
 def _manifest_list_paths_from(
     meta: dict, snapshot_id: int | None
 ) -> list[str]:

@@ -32,11 +32,13 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["MiniImapServer", "append_imap", "list_imap_ids", "consume_imap",
            "MiniPop3Server", "consume_pop3"]
 
 
-class MiniImapServer:
+class MiniImapServer(WireOwner):
     """Threaded RFC 3501 subset server with one shared INBOX."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0,
@@ -44,33 +46,11 @@ class MiniImapServer:
         self.user, self.password = user, password
         self._mailbox: list[bytes] = []
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def message_count(self) -> int:
         with self._lock:
             return len(self._mailbox)
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     # -- protocol ----------------------------------------------------------
 
@@ -154,11 +134,6 @@ class MiniImapServer:
             except OSError:
                 pass
             conn.close()
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 def _connect(host: str, port: int, user: str, password: str):
@@ -257,7 +232,7 @@ def consume_imap(
     return ids.mapInPandas(run, "msg_id int, message binary")
 
 
-class MiniPop3Server:
+class MiniPop3Server(WireOwner):
     """ConsumePOP3's counterpart [2.7.2-surface]: the RFC 1939 subset a
     consume cycle needs — USER/PASS, STAT, LIST, RETR with byte-stuffed
     multiline termination, DELE, QUIT — sharing the IMAP server's
@@ -271,18 +246,7 @@ class MiniPop3Server:
         self._store = messages  # share an IMAP server's mailbox if given
         self._local: list[bytes] = []
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def load(self, message: bytes) -> None:
         with self._lock:
@@ -292,17 +256,6 @@ class MiniPop3Server:
         if self._store is not None:
             return self._store._mailbox
         return self._local
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -379,11 +332,6 @@ class MiniPop3Server:
             except OSError:
                 pass
             conn.close()
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 def consume_pop3(

@@ -38,6 +38,8 @@ import threading
 import uuid
 from typing import Any
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["bson_encode", "bson_decode", "MiniMongoServer", "MongoWireClient"]
 
 
@@ -171,7 +173,7 @@ def _read_op_msg(sock_file) -> tuple[int, dict]:
 # ---------------------------------------------------------------- server ---
 
 
-class MiniMongoServer:
+class MiniMongoServer(WireOwner):
     """Threaded OP_MSG server: insert/find/count/ping.  Inserted
     documents land durably (one JSON file each) AND index in memory for
     the wire reads."""
@@ -181,29 +183,7 @@ class MiniMongoServer:
         os.makedirs(landing_dir, exist_ok=True)
         self._store: dict[str, list[dict]] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -269,11 +249,6 @@ class MiniMongoServer:
         with open(tmp, "w") as fh:
             fh.write(json.dumps(rec, separators=(",", ":"), default=str))
         os.rename(tmp, os.path.join(self.landing_dir, name))
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 # ---------------------------------------------------------------- client ---

@@ -46,6 +46,7 @@ from apache_nifi_spark.sources.avro_codec import (
     resolve_decoder,
     spark_to_avro_schema,
 )
+from apache_nifi_spark.streaming.wire_server import HttpHandler, HttpServer, WireOwner
 
 __all__ = [
     "MiniSchemaRegistry",
@@ -57,26 +58,21 @@ __all__ = [
 _MAGIC = 0
 
 
-class MiniSchemaRegistry:
+class MiniSchemaRegistry(WireOwner):
     """In-process schema registry speaking the public REST subset over
-    real HTTP (ThreadingHTTPServer) — swap the URL for a real Confluent
-    deployment; the protocol seam is this module."""
+    real HTTP (``wire_server.HttpServer``) — swap the URL for a real
+    Confluent deployment; the protocol seam is this module."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        import http.server
-
         self._lock = threading.Lock()
         self._by_canonical: dict[str, int] = {}
         self._by_id: dict[int, str] = {}
         self._subjects: dict[str, list[int]] = {}
         reg = self
 
-        class Handler(http.server.BaseHTTPRequestHandler):
-            # keep-alive (see streaming/listen.py): every response goes
-            # through _json, which always sends Content-Length (r17)
-            protocol_version = "HTTP/1.1"
-            disable_nagle_algorithm = True
-
+        class Handler(HttpHandler):
+            # every response goes through _json, which always sends
+            # Content-Length (HTTP/1.1 keep-alive)
             def _json(self, code: int, obj: Any) -> None:
                 body = json.dumps(obj).encode()
                 self.send_response(code)
@@ -129,16 +125,7 @@ class MiniSchemaRegistry:
                         return
                 self._json(404, {"error_code": 40401, "message": "not found"})
 
-            def log_message(self, *a: Any) -> None:
-                pass
-
-        import http.server as _hs
-
-        self._httpd = _hs.ThreadingHTTPServer((host, port), Handler)
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
+        self._srv = HttpServer(Handler, host, port).start()
 
     def _register(self, subject: str, schema: Any) -> int:
         canon = canonical_form(schema)
@@ -155,12 +142,8 @@ class MiniSchemaRegistry:
 
     @property
     def url(self) -> str:
-        host, port = self._httpd.server_address[:2]
+        host, port = self._srv.server_address[:2]
         return f"http://{host}:{port}"
-
-    def stop(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
 
 
 def _http_json(url: str, path: str, payload: Any | None = None) -> Any:

@@ -35,7 +35,6 @@ import hmac as _hmac
 import os
 import socket
 import struct
-import threading
 
 from apache_nifi_spark.sources.ssh_crypto import (
     AesCtr,
@@ -46,6 +45,7 @@ from apache_nifi_spark.sources.ssh_crypto import (
     x25519,
     x25519_keypair,
 )
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
 
 __all__ = ["SshServer", "SshClientConnection", "make_host_key"]
 
@@ -265,18 +265,7 @@ class _Transport:
         self.sock.close()
 
 
-def _check_names(reader: _Reader) -> None:
-    """Parse the peer's KEXINIT and require our single suite present."""
-    reader.string()  # skipped: cookie handled by caller slicing
-    wanted = [_KEX_ALGS, _HOSTKEY_ALGS, _CIPHERS, _CIPHERS, _MACS, _MACS]
-    for want in wanted:
-        offered = reader.string().decode("ascii").split(",")
-        if want not in offered:
-            raise ConnectionError(f"no common algorithm: need {want}, got {offered}")
-    # compression + languages + first_kex_packet_follows ignored
-
-
-class SshServer:
+class SshServer(WireOwner):
     """Threaded SSH server hosting named subsystems.
 
     ``subsystems``: name → factory(channel_send: Callable[bytes, None])
@@ -295,34 +284,7 @@ class SshServer:
         self.host_pub = ed25519_publickey(host_key_seed)
         self.users = users
         self.subsystems = subsystems
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(64)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
         t = _Transport(conn)

@@ -35,6 +35,8 @@ import struct
 import threading
 import uuid
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["MiniAmqpBroker", "publish_amqp"]
 
 _PROTO_HEADER = b"AMQP\x00\x00\x09\x01"
@@ -84,7 +86,7 @@ def _parse_shortstr(buf: bytes, pos: int) -> tuple[str, int]:
     return buf[pos + 1 : pos + 1 + n].decode("utf-8"), pos + 1 + n
 
 
-class MiniAmqpBroker:
+class MiniAmqpBroker(WireOwner):
     """0-9-1 server: handshake, channel, publisher confirms, durable
     landing of published content."""
 
@@ -93,29 +95,7 @@ class MiniAmqpBroker:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -228,11 +208,6 @@ class MiniAmqpBroker:
         with open(tmp, "wb") as fh:
             fh.write(b"\n".join(lines) + b"\n")
         os.rename(tmp, os.path.join(self.landing_dir, name))
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 class _AmqpClient:

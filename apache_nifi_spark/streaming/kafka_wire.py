@@ -49,6 +49,8 @@ import struct
 import threading
 import zlib
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["MiniKafkaBroker", "publish_kafka_wire", "consume_kafka_wire"]
 
 _API_PRODUCE, _API_FETCH, _API_METADATA = 0, 1, 3
@@ -310,7 +312,7 @@ def _read_exact(f, n: int) -> bytes:
     return buf
 
 
-class MiniKafkaBroker:
+class MiniKafkaBroker(WireOwner):
     """Single-node broker speaking ApiVersions, Metadata v0,
     Produce v0/v3, and Fetch v0/v4 (v2 RecordBatches + gzip)."""
 
@@ -325,33 +327,11 @@ class MiniKafkaBroker:
         # produce is re-served as one batch per codec run)
         self._codec_log: dict[tuple[str, int], list[int]] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def log_end_offset(self, topic: str, partition: int) -> int:
         with self._lock:
             return len(self._log.get((topic, partition), []))
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb", buffering=1 << 16)
@@ -398,7 +378,7 @@ class MiniKafkaBroker:
         if not topics:
             with self._lock:
                 topics = sorted({t for (t, _p) in self._log})
-        host, port = self._srv.getsockname()[:2]
+        host, port = self._srv.server_address[:2]
         out = bytearray()
         out += struct.pack(">i", 1)  # one broker
         out += struct.pack(">i", 0) + _kstr(host) + struct.pack(">i", port)
@@ -569,11 +549,6 @@ class MiniKafkaBroker:
                 out += struct.pack(">ihqqi", partition, _ERR_NONE, hw, hw, 0)
                 out += struct.pack(">i", len(recs)) + recs
         return bytes(out)
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 # --------------------------------------------------------------- client ---

@@ -33,6 +33,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = [
     "MiniRedisServer",
     "RedisClient",
@@ -102,40 +104,18 @@ class _Reader:
         raise ValueError(f"bad RESP type byte {t!r}")
 
 
-class MiniRedisServer:
+class MiniRedisServer(WireOwner):
     """Threaded in-memory RESP2 server (cache-client command subset)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self._data: dict[bytes, bytes] = {}
         self._hashes: dict[bytes, dict[bytes, bytes]] = {}
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(64)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def snapshot(self) -> dict[bytes, bytes]:
         with self._lock:
             return dict(self._data)
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
 
     def _serve(self, conn: socket.socket) -> None:
         rd = _Reader(conn)
@@ -209,11 +189,6 @@ class MiniRedisServer:
                 self._hashes.clear()
                 return b"+OK\r\n"
         return b"-ERR unknown command '%s'\r\n" % verb
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 class RedisClient:

@@ -32,6 +32,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["RelpLandingListener", "put_relp"]
 
 
@@ -66,7 +68,7 @@ def _read_frame(f) -> tuple[int, str, bytes]:
     return int(txnr_b), cmd_b.decode(), data
 
 
-class RelpLandingListener:
+class RelpLandingListener(WireOwner):
     """ListenRELP: handshake + framed messages, ACK per txnr, durable
     newline-joined landing batches."""
 
@@ -82,29 +84,7 @@ class RelpLandingListener:
         self.batch_size = max(1, batch_size)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -153,11 +133,6 @@ class RelpLandingListener:
         with open(tmp, "wb") as fh:
             fh.write(b"\n".join(messages) + b"\n")
         os.rename(tmp, os.path.join(self.landing_dir, name))
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 def put_relp(

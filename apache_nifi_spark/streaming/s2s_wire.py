@@ -42,6 +42,8 @@ import threading
 import uuid
 import zlib
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["SiteToSiteServer", "s2s_peers", "s2s_send", "PROTOCOL_VERSION"]
 
 _MAGIC = b"NiFi"
@@ -114,7 +116,7 @@ class _ChunkReader:
         return len(self.buf) - self.pos
 
 
-class SiteToSiteServer:
+class SiteToSiteServer(WireOwner):
     """The peer cluster's input-port endpoint (TLS 'port 10000' analog).
 
     Committed transactions land as JSON-lines files (one object per
@@ -140,18 +142,7 @@ class SiteToSiteServer:
         self._committed = 0
         self._aborted = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(128)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
+        self._srv = TcpServer(self._serve, host, port).start()
 
     @property
     def stats(self) -> tuple[int, int]:
@@ -159,21 +150,7 @@ class SiteToSiteServer:
         with self._lock:
             return self._committed, self._aborted
 
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
-
     def _serve(self, raw: socket.socket) -> None:
-        # two-phase transactions are small alternating writes; Nagle +
-        # delayed ACK would stall each phase (see streaming/listen.py;
-        # r17)
-        raw.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         try:
             conn = self._ctx.wrap_socket(raw, server_side=True)
         except (ssl.SSLError, OSError):
@@ -208,7 +185,7 @@ class SiteToSiteServer:
     def _answer_peer_list(self, f) -> None:
         """Self + configured peers, each with its queued-FlowFile count
         (clients send to the least-loaded peer — NiFi's S2S balancing)."""
-        host, port = self._srv.getsockname()[:2]
+        host, port = self._srv.server_address[:2]
         own_count = len(os.listdir(self.landing_dir))
         peers = [(host, port, own_count)] + [
             (h, p, 0) for (h, p) in self._extra_peers
@@ -280,11 +257,6 @@ class SiteToSiteServer:
         with open(tmp, "wb") as fh:
             fh.write(b"\n".join(records) + b"\n")
         os.rename(tmp, os.path.join(self.landing_dir, name))  # atomic commit
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 # --------------------------------------------------------------- client ---

@@ -28,10 +28,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = ["MiniSmtpServer", "put_smtp"]
 
 
-class MiniSmtpServer:
+class MiniSmtpServer(WireOwner):
     """Threaded RFC 5321 subset server landing one file per message."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
@@ -39,29 +41,7 @@ class MiniSmtpServer:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(32)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -142,11 +122,6 @@ class MiniSmtpServer:
         with open(tmp, "wb") as fh:
             fh.write(envelope + body)
         os.rename(tmp, os.path.join(self.landing_dir, name))
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 def put_smtp(

@@ -107,6 +107,10 @@ def run_to_memory(
     a full extra round of planning + one commit per state-store
     instance (measured: the 8-partition stream-stream join pays 4
     stores × 8 partitions = 32 commits plus ~0.8 s wall for it).
+    The conf disables EVERY no-data micro-batch of the drain, not only
+    the final one: a watermark advance between two data batches no
+    longer triggers its own empty batch either, so eligibility must
+    hold for the intermediate batches too.
     ONLY pass False when the sink's rows provably don't depend on
     watermark-triggered emission — an append-mode INNER stream-stream
     join (matches emit during data batches; the final batch only

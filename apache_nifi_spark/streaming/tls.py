@@ -14,10 +14,11 @@ secured.  This module is the Spark-side analog of that keystore mount:
   ``ssl`` contexts; the client context TRUSTS ONLY the given CA/cert
   (no system-store fallback) and verifies hostname, mirroring the
   truststore semantics.
-- ``wrap_listener(listener, ctx)`` — retrofit any socketserver-based
-  landing listener (TCP/RELP/HTTP) with TLS by wrapping its accept
-  socket; the landing-file contract is unchanged, so every downstream
-  drain works identically over the secured transport.
+- ``wrap_listener(listener, ctx)`` — retrofit any server built on
+  ``streaming/wire_server.py`` (the TCP/HTTP/RELP landing listeners and
+  every other Listen*/Put* peer) with TLS by wrapping its accept path;
+  the landing-file contract is unchanged, so every downstream drain
+  works identically over the secured transport.
 
 Scale note: TLS terminates at the listener tier (exactly as in the
 reference, where the pod's server keystore terminates it) — nothing in
@@ -84,14 +85,14 @@ def client_context(cert_path: str) -> ssl.SSLContext:
 def wrap_listener(listener, ctx: ssl.SSLContext) -> None:
     """Retrofit a landing listener with TLS.
 
-    Works for any listener built on ``socketserver``/``http.server``
-    exposing the server instance as ``_srv`` or ``_server``
-    (TcpLandingListener, HttpLandingListener): the accept path is
-    replaced by an SSL-wrapping one, so every accepted connection
-    completes a real handshake before the handler runs.  Plaintext
-    clients fail the handshake and never land data.  (RELP's listener
-    owns a raw accept loop and keeps app-level per-txnr ACK
-    reliability; it is out of this helper's scope.)
+    Works for any listener holding a ``wire_server`` server as
+    ``_srv`` or ``_server`` (TcpLandingListener, HttpLandingListener,
+    RelpLandingListener, ...): the accept path is replaced by an
+    SSL-wrapping one, so every accepted connection completes a real
+    handshake before the handler runs.  Plaintext clients fail the
+    handshake and never land data.  The base's ``get_request`` runs
+    first, so ``TCP_NODELAY`` and the idle timeout carry over to the
+    wrapped socket.
     """
     srv = getattr(listener, "_srv", None) or getattr(listener, "_server", None)
     if srv is None or not hasattr(srv, "get_request"):

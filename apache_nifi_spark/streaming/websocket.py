@@ -41,6 +41,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+
 __all__ = [
     "ws_accept_key",
     "encode_frame",
@@ -112,7 +114,7 @@ def decode_frame(sock: socket.socket) -> tuple[bool, int, bool, bytes]:
     return fin, opcode, masked, payload
 
 
-class WebSocketLandingServer:
+class WebSocketLandingServer(WireOwner):
     """ListenWebSocket: real handshake + frame reassembly, one durable
     landing file per complete message."""
 
@@ -121,35 +123,9 @@ class WebSocketLandingServer:
         os.makedirs(landing_dir, exist_ok=True)
         self._seq = 0
         self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self._srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(16)
-        self._srv.settimeout(0.2)
-        self._thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._thread.start()
-
-    @property
-    def port(self) -> int:
-        return self._srv.getsockname()[1]
-
-    def _accept_loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                conn, _ = self._srv.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break
-            threading.Thread(
-                target=self._serve_conn, args=(conn,), daemon=True
-            ).start()
+        self._srv = TcpServer(self._serve_conn, host, port).start()
 
     def _serve_conn(self, conn: socket.socket) -> None:
-        # frame-per-record echo: handshake reply + per-frame writes are
-        # small back-to-back segments (see streaming/listen.py; r17)
-        conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         try:
             self._handshake(conn)
             parts: list[bytes] = []
@@ -208,11 +184,6 @@ class WebSocketLandingServer:
         with open(tmp, "wb") as f:
             f.write(message + b"\n")
         os.rename(tmp, os.path.join(self.landing_dir, name))
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        self._srv.close()
 
 
 def _client_handshake(sock: socket.socket, host: str, port: int) -> None:

@@ -82,3 +82,19 @@ def test_negative_ids_use_exact_fallback(spark):
     rows = [(1, -7), (1, 4), (2, -7), (2, 4)]
     got = _collect(_basket_pair_counts(_items(spark, rows), False))
     assert got == {(-7, 4): 2}
+
+
+def test_int_item_column_packs_without_collisions(spark, monkeypatch):
+    # (1, 4) and (2, 3) share a + b: on an IntegerType column Spark takes
+    # shiftleft's count mod 32, so without a bigint cast both pairs would
+    # pack to the key 5 and merge into one count
+    from apache_nifi_spark import registry_analytics
+
+    rows = [(1, 1), (1, 4), (2, 2), (2, 3), (3, 1), (3, 4)]
+    items = spark.createDataFrame(rows, "basket long, item int")
+    for directed in (False, True):
+        packed = _collect(_basket_pair_counts(items, directed))
+        with monkeypatch.context() as m:
+            m.setattr(registry_analytics, "_PACK_ID_MAX", 0)  # struct keys
+            reference = _collect(_basket_pair_counts(items, directed))
+        assert packed == reference == _expected(rows, directed)

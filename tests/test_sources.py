@@ -274,7 +274,7 @@ def test_ftp_store_list_fetch_roundtrip(spark, tmp_path):
             ftp2.size("../../etc/passwd")
         ftp2.quit()
     finally:
-        srv.close()
+        srv.stop()
 
 
 def test_plan_table_ddl_create_and_evolve():
