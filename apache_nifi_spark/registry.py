@@ -20,6 +20,7 @@ Determinism rules (so order-insensitive value hashes match bit-for-bit):
 
 from __future__ import annotations
 
+import glob
 import os
 from collections.abc import Callable
 
@@ -41,6 +42,7 @@ from apache_nifi_spark.operators import (
     top_k_per_group,
     validate_record,
 )
+from apache_nifi_spark.staging import session_dir, staged
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -88,6 +90,15 @@ def _davg(c: Column, alias: str, scale: int = 6) -> Column:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return io.load_table(spark, sf_dir, name)
+
+
+def _one_file(df: DataFrame, path: str, sort: str | None = None) -> str:
+    """Write ``df`` as ONE parquet file under ``path`` — the stage builds'
+    data-file primitive — sorted by ``sort`` inside the file when given
+    (row ordinals then follow that column); returns the part file."""
+    df = df.coalesce(1)
+    (df.sortWithinPartitions(sort) if sort else df).write.mode("overwrite").parquet(path)
+    return glob.glob(f"{path}/part-*.parquet")[0]
 
 
 # =====================================================================
@@ -1770,12 +1781,10 @@ def convert_record_csv_q(spark, sf_dir):
     RecordSetWriter, read back with the CSV RecordReader under the SOURCE
     schema — the round-trip must be lossless (header names, typed parse,
     round-trippable float serialization)."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     sup = _t(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="anspark_convert_csv_")
+    out = session_dir(spark, "convert_csv")
     return convert_record(spark, sup, "csv", out)
 
 
@@ -1787,12 +1796,10 @@ def convert_record_csv_q(spark, sf_dir):
 def convert_record_json_q(spark, sf_dir):
     """ConvertRecord parquet→JSON-lines→records, including timestamp
     fidelity through ISO-8601 text."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     orders = _t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="anspark_convert_json_")
+    out = session_dir(spark, "convert_json")
     return convert_record(spark, orders, "json", out)
 
 
@@ -1812,12 +1819,10 @@ def convert_record_avro_q(spark, sf_dir):
     timestamp-micros logicals.  A deterministic 1-in-10 key subset keeps
     the pure-Python encode cost proportionate in the suite bench while
     exercising every codec path."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 10 == 0)
-    out = tempfile.mkdtemp(prefix="anspark_convert_avro_")
+    out = session_dir(spark, "convert_avro")
     return convert_record(spark, orders, "avro", out)
 
 
@@ -1843,12 +1848,10 @@ def convert_record_avro_nested_q(spark, sf_dir):
     multiply and floor are EXACT IEEE ops, so the rendering is a pure
     function of the round-tripped float bits, engine-identical with no
     decimal-rounding edge anywhere."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="anspark_convert_avro_emb_")
+    out = session_dir(spark, "convert_avro_emb")
     rt = convert_record(spark, emb, "avro", out)
     return rt.select(
         "vec_id",
@@ -1878,8 +1881,6 @@ def split_avro_datum_q(spark, sf_dir):
     per-datum FlowFile fan-out — then every little container decodes
     standalone and the union must equal the source rows
     (sources/avro_codec.split_avro_column)."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_binary_files
     from apache_nifi_spark.sources.avro_codec import (
         decode_container,
@@ -1890,7 +1891,7 @@ def split_avro_datum_q(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out = tempfile.mkdtemp(prefix="anspark_splitavro_")
+    out = session_dir(spark, "splitavro")
     write_avro(o, out)
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
     split = split_avro_column(containers)
@@ -1921,14 +1922,12 @@ def convert_record_orc_q(spark, sf_dir):
     """ConvertRecord parquet→ORC→records (§2.2): the ORC record
     reader/writer pairing on Spark's native columnar ORC path —
     round-trip must be value-exact under the source schema."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     sup = _t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    out = tempfile.mkdtemp(prefix="anspark_convert_orc_")
+    out = session_dir(spark, "convert_orc")
     return convert_record(spark, sup, "orc", out)
 
 
@@ -1952,8 +1951,6 @@ def avro_schema_evolution_q(spark, sf_dir):
     (d) skips a writer-only field (o_orderstatus).  Decode fans out per
     file via binaryFile + mapInPandas
     (sources/avro_codec.decode_container_resolved)."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_binary_files
     from apache_nifi_spark.sources.avro_codec import (
         decode_container_resolved,
@@ -1963,7 +1960,7 @@ def avro_schema_evolution_q(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    out = tempfile.mkdtemp(prefix="anspark_avroevo_")
+    out = session_dir(spark, "avroevo")
     write_avro(o, out)
     reader_schema = {
         "type": "record",
@@ -2030,8 +2027,6 @@ def extract_avro_metadata_q(spark, sf_dir):
     codec, and the datum count read from block headers alone (no datum
     decode) — sources/avro_codec.extract_avro_metadata; the fingerprint
     implementation is pinned to the spec's published '"int"' vector."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_binary_files
     from apache_nifi_spark.sources.avro_codec import (
         extract_avro_metadata,
@@ -2044,7 +2039,7 @@ def extract_avro_metadata_q(spark, sf_dir):
         .select("o_orderkey", "o_orderstatus")
         .coalesce(1)
     )
-    out = tempfile.mkdtemp(prefix="anspark_avrometa_")
+    out = session_dir(spark, "avrometa")
     write_avro(o, out)
     containers = read_binary_files(spark, out, glob="*.avro").select("content")
     return extract_avro_metadata(containers)
@@ -2064,14 +2059,12 @@ def convert_avro_to_json_q(spark, sf_dir):
     (sources/avro_codec.read_avro) straight into JSON text per datum —
     the processor's FlowFile content transform — via to_json over the
     decoded record struct."""
-    import tempfile
-
     from apache_nifi_spark.sources.avro_codec import read_avro, write_avro
 
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 == 0).select(
         "o_orderkey", "o_orderpriority"
     )
-    out = tempfile.mkdtemp(prefix="anspark_avrojson_")
+    out = session_dir(spark, "avrojson")
     write_avro(o, out)
     back = read_avro(spark, out)
     return back.select(
@@ -2175,12 +2168,10 @@ def convert_record_xml_q(spark, sf_dir):
     (`sources/xml_codec.py` — spark-xml jar absent).  Round-trip must be
     value-exact through element escaping and typed re-parse under the
     source schema."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     sup = _t(spark, sf_dir, "supplier")
-    out = tempfile.mkdtemp(prefix="anspark_convert_xml_")
+    out = session_dir(spark, "convert_xml")
     return convert_record(spark, sup, "xml", out)
 
 
@@ -2224,12 +2215,10 @@ def put_file_partitioned_q(spark, sf_dir):
     """PartitionRecord + PutFile (§2.2/§2.5): write orders partitioned by
     status (one directory per key), then aggregate per partition on
     read-back — the scan prunes to partition directories."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_records, write_records
 
     orders = _t(spark, sf_dir, "orders")
-    out = tempfile.mkdtemp(prefix="anspark_putfile_")
+    out = session_dir(spark, "putfile")
     write_records(orders.repartition("o_orderstatus"), out, "parquet", partition_by=["o_orderstatus"])
     back = read_records(spark, out, "parquet")
     return back.groupBy("o_orderstatus").agg(
@@ -2786,12 +2775,10 @@ def stream_multi_route_q(spark, sf_dir):
     micro-batch once and appends every route's rows to its own directory;
     read-back counts per route are the oracle check.  (Routes here are
     disjoint so 'all matching' equals 'first matching'.)"""
-    import tempfile
-
     from apache_nifi_spark.streaming import route_stream_to_files, stream_events
 
-    base = tempfile.mkdtemp(prefix="anspark_routes_")
-    cp = tempfile.mkdtemp(prefix="anspark_routes_cp_")
+    base = session_dir(spark, "routes")
+    cp = session_dir(spark, "routes_cp")
     sdf = stream_events(spark, sf_dir)
     q = route_stream_to_files(
         sdf,
@@ -3522,15 +3509,13 @@ def _staged_bucketed_tables(spark, sf_dir: str) -> tuple[str, str]:
     li_name, o_name = _bucketed_names(sf_dir)
     if spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name):
         return li_name, o_name
-    import tempfile
-
     from apache_nifi_spark.sources import write_bucketed
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     o = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
-    base = tempfile.mkdtemp(prefix="anspark_bucketed_")
+    base = session_dir(spark, "bucketed")
     write_bucketed(li, li_name, ["l_orderkey"], 8, path=f"{base}/li")
     write_bucketed(o, o_name, ["l_orderkey"], 8, path=f"{base}/o")
     return li_name, o_name
@@ -4011,36 +3996,25 @@ from apache_nifi_spark import registry_stats  # noqa: E402,F401
 from apache_nifi_spark import registry_analytics  # noqa: E402,F401
 
 
-_ICEBERG_POSDEL_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_iceberg_posdel(spark, sf_dir):
     """Iceberg v2 table with POSITION DELETES: documents [0,400) in two
     position-sorted data files, one data commit, then TWO delete
     commits marking every ``doc_id % 7 == 3`` ordinal (split by parity
     so the reader proves multi-delete-file union) — data parquet never
     rewritten."""
-    if sf_dir in _ICEBERG_POSDEL_STAGE:
-        return _ICEBERG_POSDEL_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_iceposdel_")
+    root = session_dir(spark, "iceposdel")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     added, paths = [], {}
     for k in range(2):
-        (
+        p = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 200) & (F.col("doc_id") < k * 200 + 200)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*200
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            ),
+            f"{root}/f{k}", sort="doc_id",  # ordinal = doc_id - k*200
         )
-        p = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         paths[k] = p
         added.append({"file_path": p, "partition": f"p{k}",
                       "record_count": 200,
@@ -4053,7 +4027,6 @@ def _staged_iceberg_posdel(spark, sf_dir):
     iceberg_commit(root, 603, added=[], position_deletes={
         paths[0]: [d for d in range(3, 200, 7) if d % 2 == 0],
     })
-    _ICEBERG_POSDEL_STAGE[sf_dir] = root
     return root
 
 

@@ -20,9 +20,11 @@ from apache_nifi_spark.registry import (
     QUERIES,
     _davg,
     _dsum,
+    _one_file,
     _t,
     register,
 )
+from apache_nifi_spark.staging import session_dir, staged
 
 # =====================================================================
 # Connector-semantics closure (SURVEY.md §2.1/§2.2 final rows): the
@@ -91,7 +93,6 @@ def publish_amqp_wire_q(spark, sf_dir):
     exactly as the exchange routes (streaming/amqp_bus.binding_matches),
     aggregating value-exact."""
     import glob as _glob
-    import tempfile
     import time as _time
 
     from apache_nifi_spark.streaming.amqp_bus import binding_matches
@@ -111,7 +112,7 @@ def publish_amqp_wire_q(spark, sf_dir):
             F.col("event_id").cast("string"), F.lit(","), F.col("event_type")
         ).alias("payload"),
     )
-    landing = tempfile.mkdtemp(prefix="anspark_amqp_")
+    landing = session_dir(spark, "amqp")
     broker = MiniAmqpBroker(landing)
     try:
         sent = publish_amqp(msgs, "127.0.0.1", broker.port, "events", "rkey", "payload")
@@ -162,7 +163,6 @@ def publish_mqtt_wire_q(spark, sf_dir):
     ConsumeMQTT's subscription does (functions/selectors), aggregating
     value-exact — frame encode → wire → land → filter is lossless."""
     import glob as _glob
-    import tempfile
     import time as _time
 
     from apache_nifi_spark.functions.selectors import mqtt_topic_matches
@@ -182,7 +182,7 @@ def publish_mqtt_wire_q(spark, sf_dir):
             F.col("event_id").cast("string"), F.lit(","), F.col("event_type")
         ).alias("payload"),
     )
-    landing = tempfile.mkdtemp(prefix="anspark_mqtt_")
+    landing = session_dir(spark, "mqtt")
     broker = MiniMqttBroker(landing)
     try:
         sent = publish_mqtt(msgs, "127.0.0.1", broker.port, "topic", "payload")
@@ -237,7 +237,6 @@ def put_elasticsearch_live_q(spark, sf_dir):
     landed documents must aggregate value-exact — render + bulk-POST +
     index is lossless end-to-end."""
     import json as _json
-    import tempfile
     import urllib.request
 
     from apache_nifi_spark.operators.http import post_http
@@ -262,7 +261,7 @@ def put_elasticsearch_live_q(spark, sf_dir):
     bodies = rendered.groupBy(F.spark_partition_id().alias("p")).agg(
         F.concat_ws("\n", F.collect_list("bulk")).alias("payload")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_es_")
+    landing = session_dir(spark, "es")
     srv = MiniElasticServer(landing)
     try:
         sent = post_http(bodies, srv.url + "/_bulk", "payload")
@@ -301,8 +300,6 @@ def put_mongo_wire_q(spark, sf_dir):
     ``count`` must equal the sent total, a wire ``find`` smoke-reads,
     and the landed documents aggregate value-exact — the BSON encode →
     wire → decode → land loop is lossless."""
-    import tempfile
-
     from apache_nifi_spark.sources.mongo_wire import (
         MiniMongoServer,
         MongoWireClient,
@@ -312,7 +309,7 @@ def put_mongo_wire_q(spark, sf_dir):
     c = io.widen_if_narrow(
         _t(spark, sf_dir, "customer").filter(F.col("c_custkey") % 25 == 0)
     ).select("c_custkey", "c_mktsegment")
-    landing = tempfile.mkdtemp(prefix="anspark_mongo_")
+    landing = session_dir(spark, "mongo")
     srv = MiniMongoServer(landing)
     try:
         sent = put_mongo_records(c, "127.0.0.1", srv.port, "customers")
@@ -654,7 +651,6 @@ def put_slack_webhook_post_q(spark, sf_dir):
     value-exact — the render+transport hop is lossless.  All 200s are
     asserted (operators/http.post_http)."""
     import glob as _glob
-    import tempfile
     import time as _time
 
     from apache_nifi_spark.operators.http import post_http
@@ -673,7 +669,7 @@ def put_slack_webhook_post_q(spark, sf_dir):
     bodies = io.widen_if_narrow(ev).select(
         wire.slack_post_payload("#ops", text).alias("payload")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_slack_")
+    landing = session_dir(spark, "slack")
     with HttpLandingListener(landing) as lst:
         sent = post_http(bodies, lst.url + "services/hook", "payload")
         n_ok = sent.filter(F.col("status") == 200).count()
@@ -841,12 +837,10 @@ def publish_jms_wire_q(spark, sf_dir):
     published-subset + selector directly on the fixture: equality
     proves the wire hop is lossless, duplicate-free, and type-exact
     (double properties round-trip via shortest-repr strings)."""
-    import tempfile
-
     from apache_nifi_spark.functions import jms_selector
     from apache_nifi_spark.streaming.stomp import MiniStompBroker, publish_stomp
 
-    landing = tempfile.mkdtemp(prefix="anspark_stomp_land_")
+    landing = session_dir(spark, "stomp_land")
     broker = MiniStompBroker(landing)
     try:
         ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
@@ -913,15 +907,11 @@ def jms_selector_consume_q(spark, sf_dir):
     )
 
 
-_SNMP_STAGE: dict[str, tuple] = {}
-
-
+@staged
 def _staged_snmp(spark, sf_dir):
-    """Process-lifetime SNMP v2c agent whose MIB is the per-user
+    """Session-lifetime SNMP v2c agent whose MIB is the per-user
     purchase-cents counters (users < 150 — a bounded enterprise-MIB
     slice, the GetSNMP device-poll shape)."""
-    if sf_dir in _SNMP_STAGE:
-        return _SNMP_STAGE[sf_dir]
     from apache_nifi_spark.sources.snmp import MiniSnmpAgent
 
     totals = (
@@ -939,8 +929,7 @@ def _staged_snmp(spark, sf_dir):
         for r in totals
     }
     agent = MiniSnmpAgent(mib)
-    _SNMP_STAGE[sf_dir] = (agent, sorted(int(r["user_id"]) for r in totals))
-    return _SNMP_STAGE[sf_dir]
+    return (agent, sorted(int(r["user_id"]) for r in totals))
 
 
 @register(
@@ -978,19 +967,14 @@ def get_snmp_poll_q(spark, sf_dir):
     )
 
 
-_DNS_STAGE: dict[str, object] = {}
-
-
+@staged
 def _staged_dns(spark, sf_dir):
-    """Process-lifetime authoritative DNS server for the synthetic
+    """Session-lifetime authoritative DNS server for the synthetic
     ``n<nationkey>.example.com`` zone (25 A records)."""
-    if sf_dir in _DNS_STAGE:
-        return _DNS_STAGE[sf_dir]
     from apache_nifi_spark.sources.dns_wire import MiniDnsServer
 
     zone = {f"n{k}.example.com": f"10.0.{k}.1" for k in range(25)}
-    _DNS_STAGE[sf_dir] = MiniDnsServer(zone)
-    return _DNS_STAGE[sf_dir]
+    return MiniDnsServer(zone)
 
 
 @register(
@@ -1121,37 +1105,31 @@ def convert_record_cbor_q(spark, sf_dir):
     1-in-10 key subset keeps the pure-Python encode cost proportionate
     in the suite bench (the avro twin uses % 10 = 0; this uses = 5 so
     the two codecs never share a cached scan).  sources/cbor_codec.py."""
-    import tempfile
-
     from apache_nifi_spark.sources import convert_record
 
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 10 == 5
     )
-    out = tempfile.mkdtemp(prefix="anspark_convert_cbor_")
+    out = session_dir(spark, "convert_cbor")
     return convert_record(spark, orders, "cbor", out)
 
-_PART_EVOLVE_STAGE: dict = {}
 
-
+@staged
 def _staged_iceberg_evolved(spark, sf_dir):
-    """Process-lifetime partition-evolution fixture: commit 1 writes
+    """Session-lifetime partition-evolution fixture: commit 1 writes
     quarters 0+1 UNPARTITIONED (spec 0); the default spec then evolves
     to identity(l_returnflag); commit 2 adds quarters 2+3 as one file
     per return flag under spec 1.  A partition-pruned read must keep
     scanning the spec-0 files (no metadata for the new column) while
     pruning spec-1 manifests by flag."""
-    if sf_dir in _PART_EVOLVE_STAGE:
-        return _PART_EVOLVE_STAGE[sf_dir]
     import glob
-    import tempfile
 
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_evolve_partition_spec,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_iceberg_pe_")
+    root = session_dir(spark, "iceberg_pe")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -1189,16 +1167,12 @@ def _staged_iceberg_evolved(spark, sf_dir):
         # identity-partitioned data files keep the source column (the
         # spec stores partition VALUES in metadata, not by dropping
         # the column from the file)
-        (
-            late.filter(F.col("l_returnflag") == flag)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/flag_{flag}")
+        part = _one_file(
+            late.filter(F.col("l_returnflag") == flag),
+            f"{root}/flag_{flag}",
         )
-        part = glob.glob(f"{root}/flag_{flag}/part-*.parquet")[0]
         added.append(finfo(part, partition=flag))
     iceberg_commit(root, 2, added=added)
-    _PART_EVOLVE_STAGE[sf_dir] = root
     return root
 
 
@@ -1234,9 +1208,7 @@ def iceberg_partition_evolution_q(spark, sf_dir):
     )
 
 
-_ICEBERG_EQDEL_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_iceberg_eqdel(spark, sf_dir):
     """Iceberg v2 table with EQUALITY DELETES (what a Flink CDC writer
     emits): commit 1 (seq 1) lands documents [0,300), commit 2 (seq 2)
@@ -1246,25 +1218,16 @@ def _staged_iceberg_eqdel(spark, sf_dir):
     lands [400,500) — which the seq-3 equality delete must NOT touch
     (strictly-lower applicability), even though those rows include the
     deleted languages."""
-    if sf_dir in _ICEBERG_EQDEL_STAGE:
-        return _ICEBERG_EQDEL_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_iceeqdel_")
+    root = session_dir(spark, "iceeqdel")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k, (lo, hi) in enumerate([(0, 300), (300, 400), (400, 500)]):
-        (
-            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - lo
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+        paths[k] = _one_file(
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
+            f"{root}/f{k}", sort="doc_id",  # ordinal = doc_id - lo
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(k, n):
         return [{
@@ -1281,7 +1244,6 @@ def _staged_iceberg_eqdel(spark, sf_dir):
         equality_deletes=(["lang"], [("de",), ("fr",)]),
     )
     iceberg_commit(root, 704, added=add(2, 100))
-    _ICEBERG_EQDEL_STAGE[sf_dir] = root
     return root
 
 
@@ -1324,10 +1286,7 @@ def iceberg_equality_delete_q(spark, sf_dir):
     )
 
 
-_DELTA_MAINT_STAGE: dict[str, str] = {}
-_DELTA_VACUUM_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_delta_maint(spark, sf_dir):
     """Delta table needing maintenance: four SMALL files of documents
     [0,400) across two commits, a DV delete marking doc_id % 9 == 4
@@ -1336,11 +1295,6 @@ def _staged_delta_maint(spark, sf_dir):
     the rewrite.  The four small files stay on disk (time travel to
     v0–v2 must still work) until :func:`_staged_delta_vacuumed` runs
     retention over them."""
-    if sf_dir in _DELTA_MAINT_STAGE:
-        return _DELTA_MAINT_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.deltalog import (
         delta_delete_rows,
         delta_optimize,
@@ -1348,20 +1302,16 @@ def _staged_delta_maint(spark, sf_dir):
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltamaint_")
+    root = session_dir(spark, "deltamaint")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     rel = {}
     for k in range(4):
-        (
+        part = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 100) & (F.col("doc_id") < k * 100 + 100)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*100
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            ),
+            f"{root}/f{k}", sort="doc_id",  # ordinal = doc_id - k*100
         )
-        part = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         rel[k] = os.path.relpath(part, root)
 
     def add(k):
@@ -1378,18 +1328,16 @@ def _staged_delta_maint(spark, sf_dir):
     assert v == 3
     # pre-OPTIMIZE time travel still resolves the small files
     assert read_delta_snapshot(spark, root, 1).count() == 400
-    _DELTA_MAINT_STAGE[sf_dir] = root
     return root
 
 
+@staged
 def _staged_delta_vacuumed(spark, sf_dir):
     """VACUUM over the maintenance fixture with the retention cutoff at
     the OPTIMIZE version: the four compacted small files become
     unreferenced by every retained snapshot and are physically deleted;
     the compacted file survives; time travel below the cutoff now fails
     loudly (the documented trade-off)."""
-    if sf_dir in _DELTA_VACUUM_STAGE:
-        return _DELTA_VACUUM_STAGE[sf_dir]
     from apache_nifi_spark.sources.deltalog import (
         delta_vacuum,
         read_delta_snapshot,
@@ -1403,7 +1351,6 @@ def _staged_delta_vacuumed(spark, sf_dir):
         raise AssertionError("time travel below the VACUUM cutoff succeeded")
     except Exception:  # noqa: BLE001 — Spark wraps the missing-file error
         pass
-    _DELTA_VACUUM_STAGE[sf_dir] = root
     return root
 
 
@@ -1471,9 +1418,7 @@ def delta_vacuum_survivor_q(spark, sf_dir):
     )
 
 
-_ICEBERG_COMPACT_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_iceberg_compacted(spark, sf_dir):
     """Iceberg maintenance fixture (the Delta OPTIMIZE/VACUUM twin):
     four small files of documents [0,400) over two commits, a commit
@@ -1483,11 +1428,6 @@ def _staged_iceberg_compacted(spark, sf_dir):
     finally snapshot expiry of everything below the compaction, which
     must physically reclaim the replaced inputs while the compacted
     read stays byte-identical."""
-    if sf_dir in _ICEBERG_COMPACT_STAGE:
-        return _ICEBERG_COMPACT_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_expire_snapshots,
@@ -1495,20 +1435,16 @@ def _staged_iceberg_compacted(spark, sf_dir):
         read_iceberg_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icecompact_")
+    root = session_dir(spark, "icecompact")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k in range(4):
-        (
+        paths[k] = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 100) & (F.col("doc_id") < k * 100 + 100)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*100
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            ),
+            f"{root}/f{k}", sort="doc_id",  # ordinal = doc_id - k*100
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(ks):
         return [{
@@ -1531,7 +1467,6 @@ def _staged_iceberg_compacted(spark, sf_dir):
     # expiry below the compaction reclaims the replaced inputs
     res = iceberg_expire_snapshots(root, keep_ids=[904])
     assert all(not os.path.exists(p) for p in paths.values()), res
-    _ICEBERG_COMPACT_STAGE[sf_dir] = root
     return root
 
 
@@ -1571,26 +1506,21 @@ def iceberg_rewrite_compacted_q(spark, sf_dir):
     )
 
 
-_DELTA_CDF_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_delta_cdf(spark, sf_dir):
     """Delta table with Change Data Feed: v0 adds documents [0,300)
     (plain add — the reader's DERIVED-insert path), v1 is a COW MERGE
     with cdc files (the EXPLICIT path): doc_id % 10 == 0 rows update
     lang to 'xx' (pre+postimage), % 10 == 5 rows delete, [300,350)
     insert."""
-    if sf_dir in _DELTA_CDF_STAGE:
-        return _DELTA_CDF_STAGE[sf_dir]
     import glob
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         delta_commit_cdf,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltacdf_")
+    root = session_dir(spark, "deltacdf")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     base = docs.filter(F.col("doc_id") < 300)
     base.coalesce(1).write.parquet(f"{root}/base")
@@ -1620,7 +1550,6 @@ def _staged_delta_cdf(spark, sf_dir):
         .unionByName(ct(ins, "insert"))
     )
     delta_commit_cdf(spark, root, 1, [rel0], new_snap, cdc)
-    _DELTA_CDF_STAGE[sf_dir] = root
     return root
 
 
@@ -1675,9 +1604,7 @@ def delta_change_feed_q(spark, sf_dir):
     )
 
 
-_ICEBERG_MANIFEST_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_iceberg_manifests(spark, sf_dir):
     """Fragmented-metadata fixture for rewrite_manifests: documents
     [0,400) in four files across two partitions, committed with
@@ -1685,30 +1612,21 @@ def _staged_iceberg_manifests(spark, sf_dir):
     writer produces), plus a position-delete commit (doc_id % 13 == 2
     ordinals of file 0), then the metadata compaction — which must
     shrink the manifest list while changing nothing a reader sees."""
-    if sf_dir in _ICEBERG_MANIFEST_STAGE:
-        return _ICEBERG_MANIFEST_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_rewrite_manifests,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icemanifests_")
+    root = session_dir(spark, "icemanifests")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     added = []
     for k in range(4):
-        (
+        p = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 100) & (F.col("doc_id") < k * 100 + 100)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*100
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            ),
+            f"{root}/f{k}", sort="doc_id",  # ordinal = doc_id - k*100
         )
-        p = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         added.append({"file_path": p, "partition": f"p{k % 2}",
                       "record_count": 100,
                       "file_size_in_bytes": os.path.getsize(p)})
@@ -1721,7 +1639,6 @@ def _staged_iceberg_manifests(spark, sf_dir):
     )
     _v, before, after = iceberg_rewrite_manifests(root, 953)
     assert before == 5 and after == 3, (before, after)
-    _ICEBERG_MANIFEST_STAGE[sf_dir] = root
     return root
 
 
@@ -1760,9 +1677,7 @@ def iceberg_rewrite_manifests_q(spark, sf_dir):
     )
 
 
-_DELTA_COLMAP_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_delta_colmap(spark, sf_dir):
     """Column-mapped Delta table (``delta.columnMapping.mode=name``)
     exercising the three operations the mode exists for, all WITHOUT
@@ -1781,18 +1696,15 @@ def _staged_delta_colmap(spark, sf_dir):
 
     Staging asserts the time-travel contract: at v0 the column reads as
     ``score``, at v1–v2 as ``quality``, at HEAD it is gone."""
-    if sf_dir in _DELTA_COLMAP_STAGE:
-        return _DELTA_COLMAP_STAGE[sf_dir]
     import glob
     import json as _json
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         read_delta_snapshot_mapped,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltacolmap_")
+    root = session_dir(spark, "deltacolmap")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
 
     def field(name, phys, typ="long"):
@@ -1855,7 +1767,6 @@ def _staged_delta_colmap(spark, sf_dir):
         "doc_id", "lang", "quality"]
     assert read_delta_snapshot_mapped(spark, root).columns == [
         "doc_id", "lang", "bucket"]
-    _DELTA_COLMAP_STAGE[sf_dir] = root
     return root
 
 
@@ -1907,9 +1818,7 @@ def delta_column_mapping_q(spark, sf_dir):
     )
 
 
-_ICEBERG_DV_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_iceberg_dv(spark, sf_dir):
     """Spec-v3 deletion-vector fixture: documents [0,400) in two files,
     then (1) a DV commit marking doc_id % 11 == 5 ordinals of file 0,
@@ -1921,29 +1830,20 @@ def _staged_iceberg_dv(spark, sf_dir):
     untouched by them under the sequence rule.  Staging asserts exactly
     one active puffin remains and that time travel to the first DV
     commit applies only it."""
-    if sf_dir in _ICEBERG_DV_STAGE:
-        return _ICEBERG_DV_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import (
         iceberg_active_files,
         iceberg_commit,
         read_iceberg_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icedv_")
+    root = session_dir(spark, "icedv")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k, (lo, hi) in enumerate([(0, 200), (200, 400), (400, 500)]):
-        (
-            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - lo
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+        paths[k] = _one_file(
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
+            f"{root}/f{k}", sort="doc_id",  # ordinal = doc_id - lo
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(k, n):
         return [{"file_path": paths[k], "partition": f"p{k}",
@@ -1964,7 +1864,6 @@ def _staged_iceberg_dv(spark, sf_dir):
     # time travel to 802 applies ONLY the first DV
     n802 = read_iceberg_snapshot(spark, root, 802).count()
     assert n802 == 400 - len([d for d in range(200) if d % 11 == 5])
-    _ICEBERG_DV_STAGE[sf_dir] = root
     return root
 
 
@@ -2005,9 +1904,7 @@ def iceberg_dv_q(spark, sf_dir):
     )
 
 
-_HUDI_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_hudi_cow(spark, sf_dir):
     """Hudi COW table exercising the full timeline protocol: c1 INSERT
     of four file groups (documents [0,400) in two partitions), c2 COW
@@ -2018,10 +1915,6 @@ def _staged_hudi_cow(spark, sf_dir):
     on disk), then a retention-checked CLEAN at c2 deleting exactly
     g1's superseded first slice; staging asserts time travel to c1
     fails loudly afterwards while c2/c3 replays stay byte-identical."""
-    if sf_dir in _HUDI_STAGE:
-        return _HUDI_STAGE[sf_dir]
-    import tempfile
-
     from apache_nifi_spark.sources.hudi import (
         hudi_clean,
         hudi_commit,
@@ -2030,7 +1923,7 @@ def _staged_hudi_cow(spark, sf_dir):
         read_hudi_snapshot,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_hudi_")
+    root = session_dir(spark, "hudi")
     hudi_init(root, "anspark_docs")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     c1, c2, c3, c4 = (
@@ -2089,7 +1982,6 @@ def _staged_hudi_cow(spark, sf_dir):
     # retained replays stay exact: 500 docs minus the 15 upsert-dropped
     # ids (101, 108, ..., 199 — the %7==3 members of [100, 200))
     assert read_hudi_snapshot(spark, root, as_of=c3).count() == 485
-    _HUDI_STAGE[sf_dir] = root
     return root
 
 
@@ -2194,40 +2086,30 @@ def hudi_clustering_q(spark, sf_dir):
     )
 
 
-_ICEBERG_REF_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_iceberg_refs(spark, sf_dir):
     """Iceberg table with named refs: snapshot 901 (docs [0,200)),
     snapshot 902 (+[200,400)); a ``tag`` 'audit-q1' PINNED at 901 and
     a ``branch`` 'dev' at 902, each written as its own metadata
     version (the spec's atomic swap).  Staging asserts an unknown ref
     fails loudly and 'main' resolves to the current snapshot."""
-    if sf_dir in _ICEBERG_REF_STAGE:
-        return _ICEBERG_REF_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_resolve_ref,
         iceberg_set_ref,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_icerefs_")
+    root = session_dir(spark, "icerefs")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     paths = {}
     for k in range(2):
-        (
+        paths[k] = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 200)
                 & (F.col("doc_id") < k * 200 + 200)
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            ),
+            f"{root}/f{k}",
         )
-        paths[k] = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
 
     def add(k):
         return [{
@@ -2246,7 +2128,6 @@ def _staged_iceberg_refs(spark, sf_dir):
         raise AssertionError("unknown iceberg ref resolved")
     except KeyError:
         pass
-    _ICEBERG_REF_STAGE[sf_dir] = root
     return root
 
 
@@ -2292,9 +2173,7 @@ def iceberg_ref_read_q(spark, sf_dir):
     return via("audit-q1").unionByName(via("dev"))
 
 
-_HUDI_MOR_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_hudi_mor(spark, sf_dir):
     """Hudi MERGE-ON-READ table: base commit c1 (two file groups,
     documents [0,400)), then three deltacommits APPENDING log blocks
@@ -2303,8 +2182,6 @@ def _staged_hudi_mor(spark, sf_dir):
     doc_id %% 9 == 4 keys, dc4 re-upserts key 301 (deleted by dc3)
     with lang='yy', proving the per-key instant-ordered merge: a
     delete then a later upsert must resurrect the key."""
-    if sf_dir in _HUDI_MOR_STAGE:
-        return _HUDI_MOR_STAGE[sf_dir]
     from apache_nifi_spark.sources.hudi import (
         hudi_append_log_block,
         hudi_commit,
@@ -2312,9 +2189,8 @@ def _staged_hudi_mor(spark, sf_dir):
         hudi_write_base_file,
         read_hudi_mor_snapshot,
     )
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="anspark_hudimor_")
+    root = session_dir(spark, "hudimor")
     hudi_init(root, "anspark_docs_mor")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     c1, dc2, dc3, dc4 = (
@@ -2362,7 +2238,6 @@ def _staged_hudi_mor(spark, sf_dir):
     n_del = len(dels)
     assert read_hudi_mor_snapshot(spark, root, as_of=dc3).count() == \
         400 - n_del
-    _HUDI_MOR_STAGE[sf_dir] = root
     return root
 
 
@@ -2428,9 +2303,7 @@ def hudi_mor_read_optimized_q(spark, sf_dir):
     )
 
 
-_DELTA_V2CKPT_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_delta_v2ckpt(spark, sf_dir):
     """Delta table proving the V2 (sidecar) checkpoint path: commits
     v0/v1 add four files of documents [0,400), v2 DV-deletes
@@ -2440,10 +2313,7 @@ def _staged_delta_v2ckpt(spark, sf_dir):
     AT OR BELOW the checkpoint is DELETED, so the snapshot read can
     only succeed through checkpointMetadata → sidecar actions →
     sidecar scan → tail replay."""
-    if sf_dir in _DELTA_V2CKPT_STAGE:
-        return _DELTA_V2CKPT_STAGE[sf_dir]
     import glob
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         delta_delete_rows,
@@ -2452,21 +2322,17 @@ def _staged_delta_v2ckpt(spark, sf_dir):
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltav2_")
+    root = session_dir(spark, "deltav2")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     rel = {}
     for k in range(5):
-        (
+        part = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 100)
                 & (F.col("doc_id") < k * 100 + 100)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{root}/f{k}")
+            ),
+            f"{root}/f{k}", sort="doc_id",
         )
-        part = glob.glob(f"{root}/f{k}/part-*.parquet")[0]
         rel[k] = os.path.relpath(part, root)
 
     def add(k):
@@ -2489,7 +2355,6 @@ def _staged_delta_v2ckpt(spark, sf_dir):
     assert read_delta_snapshot(spark, root).count() == 500 - len(
         [d for d in range(100, 200) if d % 11 == 5]
     )
-    _DELTA_V2CKPT_STAGE[sf_dir] = root
     return root
 
 
@@ -2526,17 +2391,13 @@ def delta_checkpoint_v2_q(spark, sf_dir):
     )
 
 
-_HUDI_COMPACT_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_hudi_compacted(spark, sf_dir):
     """The MOR fixture compacted: every log-bearing file group folds
     its deltas into a new base slice at c5; staging asserts the
     read-optimized view now equals the real-time view (the point of
     compaction), while time travel to the pre-compaction instant still
     reads the stale base."""
-    if sf_dir in _HUDI_COMPACT_STAGE:
-        return _HUDI_COMPACT_STAGE[sf_dir]
     from apache_nifi_spark.sources.hudi import (
         hudi_compact,
         read_hudi_mor_snapshot,
@@ -2544,28 +2405,21 @@ def _staged_hudi_compacted(spark, sf_dir):
     )
 
     import shutil
-    import tempfile
 
     # compact a COPY: the MOR fixture is shared with the real-time /
     # read-optimized queries whose oracles pin the PRE-compaction
     # state — mutating it would make results depend on query order
-    src = _staged_hudi_mor(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="anspark_hudicmp_")
-    shutil.rmtree(root)
-    shutil.copytree(src, root)
-    if True:
-        compacted = hudi_compact(
-            spark, root, "20240205080000000", key_col="doc_id"
-        )
-        assert compacted == ["g0", "g1"], compacted
-        # RO == RT after compaction — and the stale pre-compaction RO
-        # state is still reachable by time travel
-        n_rt = read_hudi_mor_snapshot(spark, root).count()
-        assert read_hudi_snapshot(spark, root).count() == n_rt
-        assert read_hudi_snapshot(
-            spark, root, as_of="20240204080000000"
-        ).count() == 400
-    _HUDI_COMPACT_STAGE[sf_dir] = root
+    root = os.path.join(session_dir(spark, "hudicmp"), "table")
+    shutil.copytree(_staged_hudi_mor(spark, sf_dir), root)
+    compacted = hudi_compact(spark, root, "20240205080000000", key_col="doc_id")
+    assert compacted == ["g0", "g1"], compacted
+    # RO == RT after compaction — and the stale pre-compaction RO
+    # state is still reachable by time travel
+    n_rt = read_hudi_mor_snapshot(spark, root).count()
+    assert read_hudi_snapshot(spark, root).count() == n_rt
+    assert read_hudi_snapshot(
+        spark, root, as_of="20240204080000000"
+    ).count() == 400
     return root
 
 

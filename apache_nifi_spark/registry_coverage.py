@@ -27,9 +27,11 @@ from apache_nifi_spark.registry import (
     QUERIES,  # noqa: F401
     _davg,  # noqa: F401
     _dsum,  # noqa: F401
+    _one_file,
     _t,
     register,
 )
+from apache_nifi_spark.staging import session_dir, staged
 
 # =====================================================================
 # Coverage round 3: attribute-map ops, charset, JSON split, grouping
@@ -246,12 +248,10 @@ def compress_content_q(spark, sf_dir):
     an operator — write json.gz, read it back through the same record
     bridge.  Splittable formats + zstd would be the 100 TB choice; gzip
     here matches NiFi's default codec."""
-    import tempfile
-
     from apache_nifi_spark.sources import read_records, write_records
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    out = tempfile.mkdtemp(prefix="anspark_gzip_")
+    out = session_dir(spark, "gzip")
     write_records(d, out, "json", options={"compression": "gzip"})
     back = read_records(
         spark, out, "json", schema="doc_id bigint, lang string, text string"
@@ -864,7 +864,6 @@ def stream_site_to_site_q(spark, sf_dir):
     SQL — the protocol hop must be lossless and duplicate-free."""
     import http.client
     import json as _json
-    import tempfile
     import urllib.parse
 
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
@@ -876,9 +875,9 @@ def stream_site_to_site_q(spark, sf_dir):
     )
     from apache_nifi_spark.streaming.tls import generate_self_signed
 
-    certdir = tempfile.mkdtemp(prefix="anspark_s2s_tls_")
+    certdir = session_dir(spark, "s2s_tls")
     cert, key = generate_self_signed(certdir)
-    landing = tempfile.mkdtemp(prefix="anspark_s2s_land_")
+    landing = session_dir(spark, "s2s_land")
     server = SiteToSiteServer(landing, cert, key)
     api = NiFiApiServer(spark, sf_dir)
     try:
@@ -917,7 +916,7 @@ def stream_site_to_site_q(spark, sf_dir):
                 ).alias("content"),
             )
         )
-        cp = tempfile.mkdtemp(prefix="anspark_s2s_cp_")
+        cp = session_dir(spark, "s2s_cp")
 
         def push(bdf, _bid):
             # one transaction per partition; summary=True keeps the
@@ -975,16 +974,14 @@ def flow_remote_s2s_egress_q(spark, sf_dir):
     reads the PEER'S landed transactions back and aggregates; the oracle
     recomputes from the fixture — equality proves the egress hop is
     lossless and duplicate-free end-to-end."""
-    import tempfile
-
     from apache_nifi_spark.plans.flow_import import run_flow
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
     from apache_nifi_spark.streaming.s2s_wire import SiteToSiteServer
     from apache_nifi_spark.streaming.tls import generate_self_signed
 
-    certdir = tempfile.mkdtemp(prefix="anspark_rpg_tls_")
+    certdir = session_dir(spark, "rpg_tls")
     cert, key = generate_self_signed(certdir)
-    landing = tempfile.mkdtemp(prefix="anspark_rpg_land_")
+    landing = session_dir(spark, "rpg_land")
     server = SiteToSiteServer(landing, cert, key)
     api = NiFiApiServer(spark, sf_dir)
     try:
@@ -1056,13 +1053,11 @@ def publish_consume_kafka_bus_q(spark, sf_dir):
     lossless and duplicate-free; broker invariants (offset monotonicity,
     sticky keys, checkpointed resume) are pinned in
     tests/test_kafka_bus.py."""
-    import tempfile
-
     from apache_nifi_spark.streaming import run_to_memory
     from apache_nifi_spark.streaming.kafka_bus import FileKafkaBus
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 20 == 0)
-    bus = FileKafkaBus(tempfile.mkdtemp(prefix="anspark_kbus_"), num_partitions=4)
+    bus = FileKafkaBus(session_dir(spark, "kbus"), num_partitions=4)
     bus.publish(
         ev.select(
             F.col("user_id").alias("k"),
@@ -2819,41 +2814,23 @@ def text_pmi_q(spark, sf_dir):
     )
 
 
-_DELTA_STAGE: dict[str, str] = {}
-_DELTA_CKPT_STAGE: dict[str, str] = {}
-_ICEBERG_STAGE: dict[str, str] = {}
-_ICEBERG_PART_STAGE: dict[str, str] = {}
-_ICEBERG_EVOLVED_STAGE: dict[str, str] = {}
-_ICEBERG_EXPIRED_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_delta(spark, sf_dir):
-    """Process-lifetime delta-protocol table over lineitem quarters
+    """Session-lifetime delta-protocol table over lineitem quarters
     (same staging pattern as the FTP/JDBC fixtures): three JSON commits
     whose replay must yield quarters 1,2,3 — quarter 0 is added in
     commit 0 and REMOVED in commit 1, so a reader that ignores remove
     actions (or replays out of order) double-counts."""
-    if sf_dir in _DELTA_STAGE:
-        return _DELTA_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.deltalog import write_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_delta_")
+    root = session_dir(spark, "delta")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     rel = {}
     for q in range(4):
         sub = f"q{q}"
-        (
-            li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
-        )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
+        part = _one_file(li.filter(F.col("l_orderkey") % 4 == q), f"{root}/{sub}")
         rel[q] = os.path.relpath(part, root)
 
     def add(q):
@@ -2867,7 +2844,6 @@ def _staged_delta(spark, sf_dir):
         {"remove": {"path": rel[0], "dataChange": True}}, add(2),
     ])
     write_commit(root, 2, [add(3)])
-    _DELTA_STAGE[sf_dir] = root
     return root
 
 
@@ -2902,32 +2878,22 @@ def delta_log_snapshot_q(spark, sf_dir):
     )
 
 
+@staged
 def _staged_iceberg(spark, sf_dir):
-    """Process-lifetime Iceberg table over lineitem quarters (the delta
+    """Session-lifetime Iceberg table over lineitem quarters (the delta
     fixture's sibling): snapshot 1 adds q0+q1, snapshot 2 deletes q0
     and adds q2+q3 — current active set is quarters 1,2,3, and time
     travel to snapshot 1 sees 0,1 (tested in tests/test_sources.py)."""
-    if sf_dir in _ICEBERG_STAGE:
-        return _ICEBERG_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_iceberg_")
+    root = session_dir(spark, "iceberg")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     info = {}
     for q in range(4):
         sub = f"q{q}"
-        (
-            li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
-        )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
+        part = _one_file(li.filter(F.col("l_orderkey") % 4 == q), f"{root}/{sub}")
         info[q] = {
             "file_path": part,
             "record_count": 0,
@@ -2938,8 +2904,7 @@ def _staged_iceberg(spark, sf_dir):
         root, 2, added=[info[2], info[3]],
         deleted=[info[0]["file_path"]],
     )
-    _ICEBERG_STAGE[sf_dir] = root
-    return _ICEBERG_STAGE[sf_dir]
+    return root
 
 
 @register(
@@ -2974,18 +2939,14 @@ def iceberg_snapshot_q(spark, sf_dir):
     )
 
 
+@staged
 def _staged_iceberg_part(spark, sf_dir):
     """Iceberg table PARTITIONED by l_returnflag (one manifest per
     partition value — the layout that makes the manifest-list partition
     summaries prune whole manifests on read)."""
-    if sf_dir in _ICEBERG_PART_STAGE:
-        return _ICEBERG_PART_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.iceberg import iceberg_commit
 
-    root = tempfile.mkdtemp(prefix="anspark_icepart_")
+    root = session_dir(spark, "icepart")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
@@ -2993,13 +2954,7 @@ def _staged_iceberg_part(spark, sf_dir):
     added = []
     for fl in flags:
         sub = f"rf_{fl}"
-        (
-            li.filter(F.col("l_returnflag") == fl)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
-        )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
+        part = _one_file(li.filter(F.col("l_returnflag") == fl), f"{root}/{sub}")
         added.append({
             "file_path": part,
             "partition": fl,
@@ -3007,8 +2962,7 @@ def _staged_iceberg_part(spark, sf_dir):
             "file_size_in_bytes": os.path.getsize(part),
         })
     iceberg_commit(root, 1, added=added)
-    _ICEBERG_PART_STAGE[sf_dir] = root
-    return _ICEBERG_PART_STAGE[sf_dir]
+    return root
 
 
 @register(
@@ -3041,6 +2995,7 @@ def iceberg_partition_pruned_q(spark, sf_dir):
     )
 
 
+@staged
 def _staged_iceberg_evolved(spark, sf_dir):
     """Iceberg table with SCHEMA EVOLUTION (r12 verdict item 6):
     snapshot 1 writes even orders under schema (o_orderkey long,
@@ -3048,17 +3003,14 @@ def _staged_iceberg_evolved(spark, sf_dir):
     o_orderstatus (field-id 3, metadata-only — no data rewrite);
     snapshot 2 adds the odd orders WITH the new column.  A current-
     schema read must null-fill the pre-evolution files."""
-    if sf_dir in _ICEBERG_EVOLVED_STAGE:
-        return _ICEBERG_EVOLVED_STAGE[sf_dir]
     import glob
-    import tempfile
 
     from apache_nifi_spark.sources.iceberg import (
         iceberg_add_column,
         iceberg_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_iceevo_")
+    root = session_dir(spark, "iceevo")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
 
     def land(sub, df):
@@ -3086,7 +3038,6 @@ def _staged_iceberg_evolved(spark, sf_dir):
         .select("o_orderkey", "o_totalprice", "o_orderstatus"),
     )
     iceberg_commit(root, 2, added=[f1])
-    _ICEBERG_EVOLVED_STAGE[sf_dir] = root
     return root
 
 
@@ -3126,6 +3077,7 @@ def iceberg_schema_evolved_q(spark, sf_dir):
     )
 
 
+@staged
 def _staged_iceberg_expired(spark, sf_dir):
     """Iceberg table after SNAPSHOT EXPIRY (r12 verdict item 6): the
     same two-commit history as _staged_iceberg (snap 1: q0+q1; snap 2:
@@ -3133,30 +3085,20 @@ def _staged_iceberg_expired(spark, sf_dir):
     only the current snapshot — snap 1 becomes unreadable, its
     manifest list and the q0 data file (live only there) are deleted
     from disk (asserted in tests/test_sources.py)."""
-    if sf_dir in _ICEBERG_EXPIRED_STAGE:
-        return _ICEBERG_EXPIRED_STAGE[sf_dir]
-    import glob
-    import tempfile
 
     from apache_nifi_spark.sources.iceberg import (
         iceberg_commit,
         iceberg_expire_snapshots,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_iceexp_")
+    root = session_dir(spark, "iceexp")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     info = {}
     for q in range(4):
         sub = f"q{q}"
-        (
-            li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
-        )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
+        part = _one_file(li.filter(F.col("l_orderkey") % 4 == q), f"{root}/{sub}")
         info[q] = {
             "file_path": part,
             "record_count": 0,
@@ -3168,7 +3110,6 @@ def _staged_iceberg_expired(spark, sf_dir):
         deleted=[info[0]["file_path"]],
     )
     iceberg_expire_snapshots(root)  # keep current (snap 2) only
-    _ICEBERG_EXPIRED_STAGE[sf_dir] = root
     return root
 
 
@@ -3203,6 +3144,7 @@ def iceberg_snapshot_expiry_q(spark, sf_dir):
     )
 
 
+@staged
 def _staged_delta_ckpt(spark, sf_dir):
     """Delta table WITH a parquet checkpoint (verdict r11 item 5): the
     same three commits as _staged_delta (active q1,q2,q3), a classic
@@ -3210,30 +3152,19 @@ def _staged_delta_ckpt(spark, sf_dir):
     removes q2 and re-adds q0 — so a correct reader needs the
     checkpoint base AND the JSON tail, and a reader that replays the
     full log gets the same answer (asserted in tests)."""
-    if sf_dir in _DELTA_CKPT_STAGE:
-        return _DELTA_CKPT_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.deltalog import (
         write_checkpoint,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltac_")
+    root = session_dir(spark, "deltac")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
     rel = {}
     for q in range(4):
         sub = f"q{q}"
-        (
-            li.filter(F.col("l_orderkey") % 4 == q)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
-        )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
+        part = _one_file(li.filter(F.col("l_orderkey") % 4 == q), f"{root}/{sub}")
         rel[q] = os.path.relpath(part, root)
 
     def add(q):
@@ -3251,8 +3182,7 @@ def _staged_delta_ckpt(spark, sf_dir):
     write_commit(root, 3, [
         {"remove": {"path": rel[2], "dataChange": True}}, add(0),
     ])
-    _DELTA_CKPT_STAGE[sf_dir] = root
-    return _DELTA_CKPT_STAGE[sf_dir]
+    return root
 
 
 @register(
@@ -3286,9 +3216,7 @@ def delta_checkpoint_snapshot_q(spark, sf_dir):
     )
 
 
-_DELTA_DV_STAGE: dict[str, str] = {}
-
-
+@staged
 def _staged_delta_dv(spark, sf_dir):
     """Delta table with inline DELETION VECTORS (merge-on-read DML):
     two position-sorted data files of documents [0,200) and [200,400),
@@ -3296,31 +3224,22 @@ def _staged_delta_dv(spark, sf_dir):
     ordinals of every ``doc_id % 7 == 3`` row — in TWO delete commits
     (file 0 twice, so the reader also proves DV merge) — without ever
     rewriting the parquet."""
-    if sf_dir in _DELTA_DV_STAGE:
-        return _DELTA_DV_STAGE[sf_dir]
-    import glob
-    import tempfile
-
     from apache_nifi_spark.sources.deltalog import (
         delta_delete_rows,
         write_commit,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_deltadv_")
+    root = session_dir(spark, "deltadv")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     actions, rel = [], {}
     for k in range(2):
         sub = f"f{k}"
-        (
+        part = _one_file(
             docs.filter(
                 (F.col("doc_id") >= k * 200) & (F.col("doc_id") < k * 200 + 200)
-            )
-            .coalesce(1)
-            .sortWithinPartitions("doc_id")  # ordinal = doc_id - k*200
-            .write.mode("overwrite")
-            .parquet(f"{root}/{sub}")
+            ),
+            f"{root}/{sub}", sort="doc_id",  # ordinal = doc_id - k*200
         )
-        part = glob.glob(f"{root}/{sub}/part-*.parquet")[0]
         rel[k] = os.path.relpath(part, root)
         actions.append({"add": {"path": rel[k], "size": os.path.getsize(part)}})
     write_commit(root, 0, actions)
@@ -3336,7 +3255,6 @@ def _staged_delta_dv(spark, sf_dir):
             rel[1]: [d - 200 for d in range(206, 400, 7)],
         },
     )
-    _DELTA_DV_STAGE[sf_dir] = root
     return root
 
 
@@ -3373,20 +3291,12 @@ def delta_deletion_vector_q(spark, sf_dir):
     )
 
 
-_FTP_STAGE: dict[str, tuple] = {}
-
-
-def _staged_ftp(spark, sf_dir):
-    """Process-lifetime FTP server over a CSV export of the events subset
-    (same staging pattern as the echo/JDBC fixtures): Spark writes the
-    CSVs, MiniFtpServer serves them, the query re-ingests over the wire."""
-    if sf_dir in _FTP_STAGE:
-        return _FTP_STAGE[sf_dir]
-    import tempfile
-
-    from apache_nifi_spark.sources.ftp import MiniFtpServer
-
-    root = tempfile.mkdtemp(prefix="anspark_ftp_")
+@staged
+def _staged_events_csv(spark, sf_dir):
+    """CSV export of the events subset under ``<root>/data``: Spark
+    writes the CSVs, the staged FTP and SFTP servers serve them, and the
+    queries re-ingest them over the wire."""
+    root = session_dir(spark, "events_csv")
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 50 == 0)
     (
         ev.select("event_id", "event_type", "value")
@@ -3394,9 +3304,16 @@ def _staged_ftp(spark, sf_dir):
         .write.mode("overwrite")
         .csv(f"{root}/data")
     )
-    srv = MiniFtpServer(root)
-    _FTP_STAGE[sf_dir] = (srv, "127.0.0.1", srv.port)
-    return _FTP_STAGE[sf_dir]
+    return root
+
+
+@staged
+def _staged_ftp(spark, sf_dir):
+    """Session-lifetime FTP server over the events CSV export."""
+    from apache_nifi_spark.sources.ftp import MiniFtpServer
+
+    srv = MiniFtpServer(_staged_events_csv(spark, sf_dir))
+    return (srv, "127.0.0.1", srv.port)
 
 
 @register(
@@ -3454,8 +3371,6 @@ def put_ftp_roundtrip_q(spark, sf_dir):
     per partition), then the uploaded tree lists and fetches back —
     write and read directions closing over the same protocol server.
     Oracle identity proves the STOR hop is byte-lossless."""
-    import tempfile
-
     from apache_nifi_spark.sources.ftp import (
         MiniFtpServer,
         fetch_ftp,
@@ -3463,7 +3378,7 @@ def put_ftp_roundtrip_q(spark, sf_dir):
         put_ftp,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_putftp_")
+    root = session_dir(spark, "putftp")
     srv = MiniFtpServer(root)
     nation = _t(spark, sf_dir, "nation").select(
         F.concat(F.lit("n_"), F.col("n_nationkey").cast("string"), F.lit(".csv"))
@@ -3519,29 +3434,14 @@ def ftp_list_fetch_q(spark, sf_dir):
     )
 
 
-_SFTP_STAGE: dict[str, tuple] = {}
-
-
+@staged
 def _staged_sftp(spark, sf_dir):
-    """Process-lifetime SFTP server over a CSV export of the events
-    subset (the _staged_ftp pattern on the SSH wire)."""
-    if sf_dir in _SFTP_STAGE:
-        return _SFTP_STAGE[sf_dir]
-    import tempfile
-
+    """Session-lifetime SFTP server over the events CSV export (the
+    _staged_ftp pattern on the SSH wire)."""
     from apache_nifi_spark.sources.sftp import MiniSftpServer
 
-    root = tempfile.mkdtemp(prefix="anspark_sftp_")
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 50 == 0)
-    (
-        ev.select("event_id", "event_type", "value")
-        .coalesce(4)
-        .write.mode("overwrite")
-        .csv(f"{root}/data")
-    )
-    srv = MiniSftpServer(root)
-    _SFTP_STAGE[sf_dir] = (srv, "127.0.0.1", srv.port)
-    return _SFTP_STAGE[sf_dir]
+    srv = MiniSftpServer(_staged_events_csv(spark, sf_dir))
+    return (srv, "127.0.0.1", srv.port)
 
 
 @register(
@@ -3604,8 +3504,6 @@ def put_sftp_roundtrip_q(spark, sf_dir):
     WRITEs), then the uploaded tree lists and fetches back — both
     directions closing over the same SSH server.  Oracle identity
     proves the encrypt → MAC → decrypt hop is byte-lossless."""
-    import tempfile
-
     from apache_nifi_spark.sources.sftp import (
         MiniSftpServer,
         fetch_sftp,
@@ -3613,7 +3511,7 @@ def put_sftp_roundtrip_q(spark, sf_dir):
         put_sftp,
     )
 
-    root = tempfile.mkdtemp(prefix="anspark_putsftp_")
+    root = session_dir(spark, "putsftp")
     srv = MiniSftpServer(root)
     try:
         nation = _t(spark, sf_dir, "nation").select(
@@ -3668,8 +3566,6 @@ def amqp_exchange_route_q(spark, sf_dir):
     AMQP's deliver-once-per-queue rule (OR-combined predicate, not a
     union of copies); routing itself is a codegen'd Catalyst filter —
     see streaming/amqp_bus.py."""
-    import tempfile
-
     from apache_nifi_spark.streaming.amqp_bus import AmqpExchange
     from apache_nifi_spark.streaming.kafka_bus import FileKafkaBus
 
@@ -3682,7 +3578,7 @@ def amqp_exchange_route_q(spark, sf_dir):
         ).alias("rk"),
         F.to_json(F.struct("event_id", "value")).alias("v"),
     )
-    bus = FileKafkaBus(tempfile.mkdtemp(prefix="anspark_amqp_"), num_partitions=4)
+    bus = FileKafkaBus(session_dir(spark, "amqp"), num_partitions=4)
     ex = AmqpExchange(bus, "ev", kind="topic")
     ex.bind("q_click", "click.#").bind("q_click", "purchase.even")
     ex.bind("q_even", "*.even")
@@ -3778,19 +3674,13 @@ def python_udtf_q(spark, sf_dir):
     )
 
 
-_ROLLING_DIRS: dict[str, str] = {}
-
-
+@staged
 def _staged_rolling_dir(spark, sf_dir: str) -> str:
     """Stage the events fixture as a 4-file 'rolling log' directory once
-    per process (fixture prep, not part of the measured operator)."""
-    if sf_dir not in _ROLLING_DIRS:
-        import tempfile
-
-        rolling = tempfile.mkdtemp(prefix="anspark_tail_")
-        _t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(rolling)
-        _ROLLING_DIRS[sf_dir] = rolling
-    return _ROLLING_DIRS[sf_dir]
+    per session (fixture prep, not part of the measured operator)."""
+    rolling = session_dir(spark, "tail")
+    _t(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(rolling)
+    return rolling
 
 
 @register(

@@ -24,6 +24,7 @@ from apache_nifi_spark.registry import (
     _t,
     register,
 )
+from apache_nifi_spark.staging import session_dir, staged
 
 # =====================================================================
 # Mega flow import (round-6 item #1): tests/fixtures/mega_flow.json
@@ -36,22 +37,17 @@ from apache_nifi_spark.registry import (
 # =====================================================================
 
 _MEGA_FLOW_PATH = __file__.rsplit("/", 2)[0] + "/tests/fixtures/mega_flow.json"
-_MEGA_CACHE: dict = {}
 
 
-def _mega(spark, sf_dir, output):
+@staged
+def _mega(spark, sf_dir):
     """Compile the mega flow once per (session, sf_dir) — compilation is
     driver-side plan building only (lazy DataFrames), so the cache just
-    avoids re-running the importer's eager SQL analysis 13×.  Keyed on
-    applicationId, not ``id(spark)`` — a GC'd session's id can be reused
-    by a new session, which would serve stale plans."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MEGA_CACHE:
-        from apache_nifi_spark.plans.flow_import import run_flow_json
+    avoids re-running the importer's eager SQL analysis 13×."""
+    from apache_nifi_spark.plans.flow_import import run_flow_json
 
-        with open(_MEGA_FLOW_PATH) as f:
-            _MEGA_CACHE[key] = run_flow_json(spark, sf_dir, f.read())
-    return _MEGA_CACHE[key][output]
+    with open(_MEGA_FLOW_PATH) as f:
+        return run_flow_json(spark, sf_dir, f.read())
 
 
 @register(
@@ -74,7 +70,7 @@ def mega_flow_orders_q(spark, sf_dir):
     RemoveRecordField → UpdateRecord(EL) → AttributesToCSV →
     CryptographicHashContent(MD5) → QueryRecord — ten processor types
     composed into ONE Catalyst plan by the importer."""
-    return _mega(spark, sf_dir, "OrdersAgg.byStatus")
+    return _mega(spark, sf_dir)["OrdersAgg.byStatus"]
 
 
 @register(
@@ -103,7 +99,7 @@ def mega_flow_docs_q(spark, sf_dir):
     """Mega-flow S2: ModifyBytes → CountText → ScanContent → ReplaceText →
     EncodeContent(base64) → CryptographicHashContent(SHA-256) →
     QueryRecord over the documents corpus."""
-    return _mega(spark, sf_dir, "DocsAgg.byLang")
+    return _mega(spark, sf_dir)["DocsAgg.byLang"]
 
 
 @register(
@@ -118,7 +114,7 @@ def mega_flow_json_q(spark, sf_dir):
     """Mega-flow S3: FlattenJson → EvaluateJsonPath → JoltTransformJSON →
     ValidateJson(schema) → QueryRecord; the schema admits every rendered
     document, so the valid branch is the whole stream."""
-    return _mega(spark, sf_dir, "JsonAgg.agg")
+    return _mega(spark, sf_dir)["JsonAgg.agg"]
 
 
 @register(
@@ -137,7 +133,7 @@ def mega_flow_json_q(spark, sf_dir):
 def mega_flow_grok_q(spark, sf_dir):
     """Mega-flow S4: GenerateRecord → UpdateAttribute(EL string build) →
     ExtractGrok(%{INT}/%{WORD} compiled to regex captures) → QueryRecord."""
-    return _mega(spark, sf_dir, "GrokAgg.agg")
+    return _mega(spark, sf_dir)["GrokAgg.agg"]
 
 
 @register(
@@ -154,6 +150,7 @@ def mega_flow_grok_q(spark, sf_dir):
     FROM ded GROUP BY o_orderstatus
     """,
 )
+@staged
 def rest_flow_author_q(spark, sf_dir):
     """REST flow-authoring control plane (§3.1 [2.7.2-surface]; the
     reference's primary entry point — its deploy scripts drive flows
@@ -174,12 +171,9 @@ def rest_flow_author_q(spark, sf_dir):
         start_group_via_api,
     )
 
-    # Author once per (session, sf_dir) — same policy as _MEGA_CACHE for
-    # the direct import: authoring + compile-on-start is control-plane
+    # Author once per (session, sf_dir) — same policy as _mega for the
+    # direct import: authoring + compile-on-start is control-plane
     # setup; the returned plan stays lazy either way.
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_author")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     server = NiFiApiServer(spark, sf_dir)
     try:
         with open(_MEGA_FLOW_PATH) as f:
@@ -203,8 +197,7 @@ def rest_flow_author_q(spark, sf_dir):
             conn.close()
         # lazy plan; safe to serve after server.stop() — the data path
         # never touches the control plane
-        _MEGA_CACHE[cache_key] = server.outputs(gid)["OrdersAgg.byStatus"]
-        return _MEGA_CACHE[cache_key]
+        return server.outputs(gid)["OrdersAgg.byStatus"]
     finally:
         server.stop()
 
@@ -216,6 +209,7 @@ def rest_flow_author_q(spark, sf_dir):
     FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
     """,
 )
+@staged
 def rest_ports_service_flow_q(spark, sf_dir):
     """Ports + controller services over the REST control plane
     (§3.1 [2.7.2-surface]; S2S input ports implied by reference
@@ -233,9 +227,6 @@ def rest_ports_service_flow_q(spark, sf_dir):
         start_group_via_api,
     )
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_ports_svc")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     contents = {
         "name": "ports-svc",
         "controllerServices": [{
@@ -264,11 +255,9 @@ def rest_ports_service_flow_q(spark, sf_dir):
     try:
         gid = author_flow_via_api(server.url, contents)
         start_group_via_api(server.url, gid)
-        out = server.outputs(gid)["enriched.success"].select(
+        return server.outputs(gid)["enriched.success"].select(
             "c_custkey", "c_name", "c_nationkey", "n_name"
         )
-        _MEGA_CACHE[cache_key] = out
-        return out
     finally:
         server.stop()
 
@@ -282,6 +271,7 @@ def rest_ports_service_flow_q(spark, sf_dir):
     FROM orders WHERE o_orderstatus = 'F' GROUP BY o_orderpriority
     """,
 )
+@staged
 def rest_secured_token_q(spark, sf_dir):
     """Single-user token auth on the REST control plane (§3.1
     [2.7.2-surface]; the reference deploys the stock image SECURED —
@@ -301,9 +291,6 @@ def rest_secured_token_q(spark, sf_dir):
         start_group_via_api,
     )
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_secured")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     server = NiFiApiServer(
         spark, sf_dir, credentials=("admin", "admin123456!")
     )
@@ -371,8 +358,7 @@ def rest_secured_token_q(spark, sf_dir):
             conn.close()
         outs = start_group_via_api(server.url, gid, token=token)
         assert "agg.by_priority" in outs, outs
-        _MEGA_CACHE[cache_key] = server.outputs(gid)["agg.by_priority"]
-        return _MEGA_CACHE[cache_key]
+        return server.outputs(gid)["agg.by_priority"]
     finally:
         server.stop()
 
@@ -386,6 +372,7 @@ def rest_secured_token_q(spark, sf_dir):
     FROM customer WHERE c_acctbal > 5000 GROUP BY c_mktsegment
     """,
 )
+@staged
 def rest_parameter_context_q(spark, sf_dir):
     """Parameter contexts over the REST control plane (§2.13/§3.1
     [2.7.2-surface]): the flow's table name and filter threshold live in
@@ -400,9 +387,6 @@ def rest_parameter_context_q(spark, sf_dir):
 
     from apache_nifi_spark.plans.rest_api import NiFiApiServer
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir, "rest_param_ctx")
-    if cache_key in _MEGA_CACHE:
-        return _MEGA_CACHE[cache_key]
     server = NiFiApiServer(spark, sf_dir)
     try:
         u = urllib.parse.urlsplit(server.url)
@@ -460,8 +444,7 @@ def rest_parameter_context_q(spark, sf_dir):
                  {"state": "RUNNING"})
         finally:
             conn.close()
-        _MEGA_CACHE[cache_key] = server.outputs(gid)["agg.by_segment"]
-        return _MEGA_CACHE[cache_key]
+        return server.outputs(gid)["agg.by_segment"]
     finally:
         server.stop()
 
@@ -534,7 +517,7 @@ def mega_flow_fork_join_q(spark, sf_dir):
     """Mega-flow S5: ForkEnrichment → (enrichment: QueryRecord calc) →
     JoinEnrichment SQL strategy rejoining original+enrichment views →
     QueryRecord aggregate."""
-    return _mega(spark, sf_dir, "JoinAgg.agg")
+    return _mega(spark, sf_dir)["JoinAgg.agg"]
 
 
 @register(
@@ -550,7 +533,7 @@ def mega_flow_merge_split_q(spark, sf_dir):
     """Mega-flow S6: MergeRecord(bin by o_custkey) → SplitRecord(explode
     back with fragment_index) → QueryRecord; sum of fragment indexes per
     bin is n(n-1)/2 — deterministic despite unordered bins."""
-    return _mega(spark, sf_dir, "MergeSplitAgg.agg")
+    return _mega(spark, sf_dir)["MergeSplitAgg.agg"]
 
 
 @register(
@@ -567,7 +550,7 @@ def mega_flow_merge_split_q(spark, sf_dir):
 def mega_flow_record_stats_q(spark, sf_dir):
     """Mega-flow S7: PartitionRecord(hash co-locate) →
     CalculateRecordStats(per-category counts + total)."""
-    return _mega(spark, sf_dir, "CustStats.success")
+    return _mega(spark, sf_dir)["CustStats.success"]
 
 
 @register(
@@ -587,7 +570,7 @@ def mega_flow_scan_funnel_q(spark, sf_dir):
     """Mega-flow S8: ScanAttribute(dictionary route) →
     DuplicateFlowFile(×3) → RemoveRecordField → Funnel(union with the
     unmatched branch) → LogAttribute → QueryRecord."""
-    return _mega(spark, sf_dir, "NationAgg.agg")
+    return _mega(spark, sf_dir)["NationAgg.agg"]
 
 
 @register(
@@ -602,7 +585,7 @@ def mega_flow_merge_digest_q(spark, sf_dir):
     """Mega-flow S9a: MergeContent(bin-pack by source, doc_id order,
     empty demarcator) → QueryRecord digesting each merged payload —
     byte-exact reassembly proof."""
-    return _mega(spark, sf_dir, "SrcDigest.agg")
+    return _mega(spark, sf_dir)["SrcDigest.agg"]
 
 
 @register(
@@ -618,7 +601,7 @@ def mega_flow_merge_digest_q(spark, sf_dir):
 def mega_flow_line_split_q(spark, sf_dir):
     """Mega-flow S9b: ReplaceText(space→newline) → SplitText(posexplode
     lines) → QueryRecord."""
-    return _mega(spark, sf_dir, "LineAgg.agg")
+    return _mega(spark, sf_dir)["LineAgg.agg"]
 
 
 @register(
@@ -633,7 +616,7 @@ def mega_flow_segments_q(spark, sf_dir):
     """Mega-flow S9c: SegmentContent(200-char windows, explode inside the
     generate node) → QueryRecord; segment lengths must re-sum to the
     source lengths exactly."""
-    return _mega(spark, sf_dir, "SegAgg.agg")
+    return _mega(spark, sf_dir)["SegAgg.agg"]
 
 
 @register(
@@ -653,7 +636,7 @@ def mega_flow_csv_frags_q(spark, sf_dir):
     """Mega-flow S9d: ConvertCharacterSet(noop roundtrip) →
     ConvertRecord(csv writer) → IdentifyMimeType → SplitContent(split on
     the byte sequence) → QueryRecord."""
-    return _mega(spark, sf_dir, "CsvAgg.agg")
+    return _mega(spark, sf_dir)["CsvAgg.agg"]
 
 
 @register(
@@ -672,7 +655,7 @@ def mega_flow_route_distribute_q(spark, sf_dir):
     """Mega-flow S10: RouteText(matched) → ExtractText(capture) →
     DistributeLoad(2:1 round-robin on doc_id order) → AttributesToJSON →
     QueryRecord on the 'a' relationship."""
-    return _mega(spark, sf_dir, "RouteAgg.agg")
+    return _mega(spark, sf_dir)["RouteAgg.agg"]
 
 
 # =====================================================================
@@ -687,35 +670,35 @@ def mega_flow_route_distribute_q(spark, sf_dir):
 # =====================================================================
 
 _MEGA2_FLOW_PATH = __file__.rsplit("/", 2)[0] + "/tests/fixtures/mega_flow2.json"
-_MEGA2_SYSLOG_DIR = "/tmp/anspark_mega2_syslog"
-_MEGA2_CACHE: dict = {}
 
 
-def _mega2(spark, sf_dir, output):
+@staged
+def _mega2(spark, sf_dir):
     """Compile mega flow 2 once per (session, sf_dir).  The ListenSyslog
     segment starts from a landing directory, so deterministic RFC 3164
     lines are landed first (the listener tier's output contract) — the
-    flow then drains them like any landed stream."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MEGA2_CACHE:
-        from apache_nifi_spark.operators import render_syslog_3164
-        from apache_nifi_spark.plans.flow_import import run_flow_json
+    flow then drains them like any landed stream.  Each sf_dir lands in
+    its own session dir, bound to the fixture's ``#{syslog.landing}``
+    placeholder before import."""
+    from apache_nifi_spark.operators import render_syslog_3164
+    from apache_nifi_spark.plans.flow_import import run_flow_json
 
-        ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 33 == 0)
-        lines = ev.select(
-            render_syslog_3164(
-                F.lit(134),
-                F.col("ts"),
-                F.concat(F.lit("h"), (F.col("user_id") % 5).cast("string")),
-                F.lit("engine"),
-                F.col("event_id"),
-                F.col("event_type"),
-            ).alias("value")
-        )
-        lines.coalesce(1).write.mode("overwrite").text(_MEGA2_SYSLOG_DIR)
-        with open(_MEGA2_FLOW_PATH) as f:
-            _MEGA2_CACHE[key] = run_flow_json(spark, sf_dir, f.read())
-    return _MEGA2_CACHE[key][output]
+    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 33 == 0)
+    lines = ev.select(
+        render_syslog_3164(
+            F.lit(134),
+            F.col("ts"),
+            F.concat(F.lit("h"), (F.col("user_id") % 5).cast("string")),
+            F.lit("engine"),
+            F.col("event_id"),
+            F.col("event_type"),
+        ).alias("value")
+    )
+    landing = session_dir(spark, "mega2_syslog")
+    lines.coalesce(1).write.mode("overwrite").text(landing)
+    with open(_MEGA2_FLOW_PATH) as f:
+        text = f.read().replace("#{syslog.landing}", landing)
+    return run_flow_json(spark, sf_dir, text)
 
 
 @register(
@@ -733,7 +716,7 @@ def mega2_lookup_q(spark, sf_dir):
     """Mega-flow-2 S1: LookupAttribute(broadcast nation) → UpdateAttribute
     (EL XML build) → EvaluateXPath → EvaluateXQuery(sum/count) →
     QueryRecord."""
-    return _mega2(spark, sf_dir, "LookupAgg.agg")
+    return _mega2(spark, sf_dir)["LookupAgg.agg"]
 
 
 @register(
@@ -748,7 +731,7 @@ def mega2_crypto_q(spark, sf_dir):
     """Mega-flow-2 S2: EncryptContent(AES-GCM) → DecryptContent →
     QueryRecord — the round-trip proves ciphertext integrity end-to-end
     (GCM IVs are random, so only the round-trip is value-stable)."""
-    return _mega2(spark, sf_dir, "CryptoAgg.agg")
+    return _mega2(spark, sf_dir)["CryptoAgg.agg"]
 
 
 @register(
@@ -764,7 +747,7 @@ def mega2_crypto_q(spark, sf_dir):
 def mega2_hl7_q(spark, sf_dir):
     """Mega-flow-2 S3: QueryRecord(filter) → UpdateAttribute(EL HL7 v2
     message build) → ExtractHL7Attributes → QueryRecord."""
-    return _mega2(spark, sf_dir, "Hl7Agg.agg")
+    return _mega2(spark, sf_dir)["Hl7Agg.agg"]
 
 
 @register(
@@ -779,7 +762,7 @@ def mega2_html_q(spark, sf_dir):
     """Mega-flow-2 S4: UpdateAttribute(EL HTML build) →
     ModifyHTMLElement(retag class) → GetHTMLElement(select by the NEW
     class — proves the modify ran) → QueryRecord."""
-    return _mega2(spark, sf_dir, "HtmlAgg.agg")
+    return _mega2(spark, sf_dir)["HtmlAgg.agg"]
 
 
 @register(
@@ -796,7 +779,7 @@ def mega2_email_q(spark, sf_dir):
     """Mega-flow-2 S5: QueryRecord(filter) → UpdateAttribute(EL MIME
     build) → ExtractEmailHeaders(stdlib parser in mapInPandas) →
     QueryRecord."""
-    return _mega2(spark, sf_dir, "MailAgg.agg")
+    return _mega2(spark, sf_dir)["MailAgg.agg"]
 
 
 @register(
@@ -817,7 +800,7 @@ def mega2_rolling_q(spark, sf_dir):
     """Mega-flow-2 S6: AttributeRollingWindow(last-5 per user) →
     QueryRecord — the ROWS-frame batch analog of NiFi's stateful rolling
     window."""
-    return _mega2(spark, sf_dir, "RollAgg.agg")
+    return _mega2(spark, sf_dir)["RollAgg.agg"]
 
 
 @register(
@@ -837,7 +820,7 @@ def mega2_rolling_q(spark, sf_dir):
 def mega2_monitor_q(spark, sf_dir):
     """Mega-flow-2 S7: MonitorActivity(1 h threshold) → QueryRecord over
     the inactivity gaps."""
-    return _mega2(spark, sf_dir, "GapAgg.agg")
+    return _mega2(spark, sf_dir)["GapAgg.agg"]
 
 
 @register(
@@ -854,7 +837,7 @@ def mega2_monitor_q(spark, sf_dir):
 def mega2_geoenrich_q(spark, sf_dir):
     """Mega-flow-2 S8: GeoEnrichIP-style broadcast range join (point ∈
     [lo, hi) bands over the nation fixture) → QueryRecord."""
-    return _mega2(spark, sf_dir, "BandAgg.agg")
+    return _mega2(spark, sf_dir)["BandAgg.agg"]
 
 
 @register(
@@ -870,7 +853,7 @@ def mega2_syslog_q(spark, sf_dir):
     """Mega-flow-2 S9: a flow that STARTS from a listener landing
     directory — ListenSyslog(drain + RFC 3164 parse) → QueryRecord.
     The lines are landed by the listener-tier contract before import."""
-    return _mega2(spark, sf_dir, "SyslogAgg.agg")
+    return _mega2(spark, sf_dir)["SyslogAgg.agg"]
 
 
 # =====================================================================
@@ -882,17 +865,14 @@ def mega2_syslog_q(spark, sf_dir):
 # =====================================================================
 
 _RETRY_FLOW_PATH = __file__.rsplit("/", 2)[0] + "/tests/fixtures/retry_flow.json"
-_RETRY_CACHE: dict = {}
 
 
-def _retry_flow(spark, sf_dir, output):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _RETRY_CACHE:
-        from apache_nifi_spark.plans.flow_import import run_flow_json
+@staged
+def _retry_flow(spark, sf_dir):
+    from apache_nifi_spark.plans.flow_import import run_flow_json
 
-        with open(_RETRY_FLOW_PATH) as f:
-            _RETRY_CACHE[key] = run_flow_json(spark, sf_dir, f.read())
-    return _RETRY_CACHE[key][output]
+    with open(_RETRY_FLOW_PATH) as f:
+        return run_flow_json(spark, sf_dir, f.read())
 
 
 @register(
@@ -908,7 +888,7 @@ def retry_loop_valid_q(spark, sf_dir):
     any attempt reach the OkAgg consumer (deterministic validation passes
     on attempt 1; the attempt-2/3 copies contribute empty legs that the
     union null-fills)."""
-    return _retry_flow(spark, sf_dir, "OkAgg.agg")
+    return _retry_flow(spark, sf_dir)["OkAgg.agg"]
 
 
 @register(
@@ -925,6 +905,6 @@ def retry_loop_exhausted_q(spark, sf_dir):
     on every attempt exhaust Maximum Retries=2 (3 attempts total) and exit
     retries_exceeded carrying flowfile.retries=3 — the unrolled graph's
     final RetryFlowFile copy."""
-    return _retry_flow(spark, sf_dir, "DeadLetter.agg")
+    return _retry_flow(spark, sf_dir)["DeadLetter.agg"]
 
 

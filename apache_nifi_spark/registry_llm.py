@@ -26,6 +26,7 @@ from apache_nifi_spark.registry import (
     _t,
     register,
 )
+from apache_nifi_spark.staging import session_dir, staged
 
 # =====================================================================
 # LLM-data-pipeline operators (§2.12) — dedup, similarity, text analysis
@@ -172,34 +173,25 @@ def dedup_ngram_jaccard_q(spark, sf_dir):
     return ngram_jaccard_pairs(d, "doc_id", "text", "lang", n=3, threshold=0.5)
 
 
-#: (applicationId, sf_dir) → pinned component fixpoint over the
-#: doc_id<60 slice.  dedup_cluster_components and
-#: dedup_canonical_longest consume the SAME connected-components
-#: result; without the memo each paid the full min-label-propagation
-#: iteration floor (r12 verdict item 3 — 1.54 s + 1.65 s at sf0.1 for
-#: one identical computation).  The pinned frame is ≤60 rows.
-_NEAR_DUP_COMP_CACHE: dict = {}
-
-
+@staged
 def _near_dup_components_60(spark, sf_dir):
     """Shared connected-components fixpoint (doc_id < 60 slice,
     3-gram Jaccard ≥ 0.5, lang-blocked): memoized per (session,
     sf_dir) and eagerly localCheckpoint-pinned — the second consumer
     reads ~60 materialized rows instead of re-running the propagation
-    loop.  At production scale this is the "materialize the component
-    mapping once, join it everywhere" pattern every dedup pipeline
-    uses (the mapping is many orders smaller than the corpus)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _NEAR_DUP_COMP_CACHE.get(key)
-    if df is None:
-        from apache_nifi_spark.llm import near_dup_clusters
+    loop.  dedup_cluster_components and dedup_canonical_longest consume
+    the SAME result; without the memo each paid the full
+    min-label-propagation iteration floor (r12 verdict item 3 — 1.54 s
+    + 1.65 s at sf0.1 for one identical computation).  At production
+    scale this is the "materialize the component mapping once, join it
+    everywhere" pattern every dedup pipeline uses (the mapping is many
+    orders smaller than the corpus)."""
+    from apache_nifi_spark.llm import near_dup_clusters
 
-        d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
-        df = near_dup_clusters(
-            d, "doc_id", "text", "lang", n=3, threshold=0.5
-        ).localCheckpoint()  # eager: ≤60 rows, pinned once for both
-        _NEAR_DUP_COMP_CACHE[key] = df
-    return df
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 60)
+    return near_dup_clusters(
+        d, "doc_id", "text", "lang", n=3, threshold=0.5
+    ).localCheckpoint()  # eager: ≤60 rows, pinned once for both
 
 
 @register(
@@ -3110,7 +3102,6 @@ def put_syslog_udp_q(spark, sf_dir):
     UdpLandingListener, and parse back.  Oracle equality proves
     render → datagram → land → parse is lossless."""
     import glob
-    import tempfile
     import time
 
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
@@ -3129,7 +3120,7 @@ def put_syslog_udp_q(spark, sf_dir):
             F.col("event_type"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_putsyslog_")
+    landing = session_dir(spark, "putsyslog")
     listener = UdpLandingListener(landing, batch_size=1)
     n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
     deadline = time.monotonic() + 15
@@ -3167,7 +3158,6 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
     through the frame parser (TcpLandingListener framing='octet'), and
     parse back.  Oracle equality proves the framed hop is lossless."""
     import glob
-    import tempfile
     import time
 
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
@@ -3186,7 +3176,7 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
             F.col("event_type"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_syslogtcp_")
+    landing = session_dir(spark, "syslogtcp")
     listener = TcpLandingListener(landing, framing="octet")
     n_sent = (
         put_tcp_octet_counted(lines, "127.0.0.1", listener.port, "content")
@@ -3229,7 +3219,6 @@ def put_relp_roundtrip_q(spark, sf_dir):
     back.  Oracle equality proves the ACKed hop is lossless
     (streaming/relp.py)."""
     import glob
-    import tempfile
     import time
 
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
@@ -3247,7 +3236,7 @@ def put_relp_roundtrip_q(spark, sf_dir):
             F.col("event_type"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_relp_")
+    landing = session_dir(spark, "relp")
     listener = RelpLandingListener(landing)
     n_sent = (
         put_relp(lines, "127.0.0.1", listener.port, "content")
@@ -3303,17 +3292,11 @@ def stream_quality_gate_q(spark, sf_dir):
     math, so the same operator body runs unchanged under Structured
     Streaming — with a per-language keep summary.  Batch-parity oracle:
     the drain must equal DuckDB computing the gate over the table."""
-    import glob
-    import os
-    import tempfile
-
     from apache_nifi_spark.llm import quality_logit
     from apache_nifi_spark.streaming import run_to_memory
+    from apache_nifi_spark.streaming.sources import stage_landing
 
-    src = f"{sf_dir}/documents.parquet"
-    landing = tempfile.mkdtemp(prefix="anspark_qgate_")
-    os.symlink(os.path.abspath(src), os.path.join(landing, "documents.parquet"))
-    schema = spark.read.parquet(landing).schema
+    landing, schema = stage_landing(spark, f"{sf_dir}/documents.parquet")
     sdf = spark.readStream.schema(schema).parquet(landing)
     gated = quality_logit(sdf).filter("keep")
     agg = gated.groupBy("lang").agg(
@@ -3427,8 +3410,6 @@ def put_tcp_roundtrip_q(spark, sf_dir):
     aggregated.  Oracle equality proves the socket hop is lossless.
     The send is forced eagerly (a sink is an action by nature) before
     the read half scans the landing dir."""
-    import tempfile
-
     from apache_nifi_spark.sinks import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
 
@@ -3441,7 +3422,7 @@ def put_tcp_roundtrip_q(spark, sf_dir):
             F.col("value").cast("string"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_puttcp_")
+    landing = session_dir(spark, "puttcp")
     listener = TcpLandingListener(landing)
     sent = put_tcp(lines, "127.0.0.1", listener.port, "content")
     n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
@@ -3493,7 +3474,6 @@ def put_tls_roundtrip_q(spark, sf_dir):
     clients are rejected at the handshake (tests/test_tls.py).  Oracle
     equality proves the encrypted hop is lossless."""
     import glob
-    import tempfile
     import time
 
     from apache_nifi_spark.sinks import put_tcp
@@ -3514,7 +3494,7 @@ def put_tls_roundtrip_q(spark, sf_dir):
         ).alias("content")
     )
     cert, key = generate_self_signed()
-    landing = tempfile.mkdtemp(prefix="anspark_puttls_")
+    landing = session_dir(spark, "puttls")
     listener = TcpLandingListener(landing)
     wrap_listener(listener, server_context(cert, key))
     sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
@@ -3635,27 +3615,28 @@ def generate_record_q(spark, sf_dir):
     )
 
 
-_SMTP_SHARED = None
-_SMTP_MSG_COUNT: dict[str, int] = {}
-
-
-def _shared_smtp(landing: str):
+@staged
+def _staged_smtp(spark, sf_dir):
     """Session-shared MiniSmtpServer, retargeted to a fresh landing dir
     per run (round-14 verdict item 4): constructing the server is
     cheap, but the pre-r15 query also LEAKED its accept thread + bound
     socket every invocation (srv.stop() was never called).  One
-    listener per process, landing_dir swapped between runs — safe
+    listener per session, landing_dir swapped between runs — safe
     because deliveries are synchronous (put_smtp counts before the
     query returns), so no write is in flight across a retarget."""
-    global _SMTP_SHARED
     from apache_nifi_spark.streaming.smtp import MiniSmtpServer
 
-    if _SMTP_SHARED is None:
-        _SMTP_SHARED = MiniSmtpServer(landing)
-    else:
-        os.makedirs(landing, exist_ok=True)
-        _SMTP_SHARED.landing_dir = landing
-    return _SMTP_SHARED
+    return MiniSmtpServer(session_dir(spark, "smtp"))
+
+
+def _smtp_orders(spark, sf_dir):
+    return _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 110 == 0)
+
+
+@staged
+def _staged_smtp_msg_count(spark, sf_dir) -> int:
+    """Control-plane scalar: messages listen_smtp_deliver sends."""
+    return _smtp_orders(spark, sf_dir).count()
 
 
 @register(
@@ -3683,14 +3664,13 @@ def listen_smtp_q(spark, sf_dir):
     projection + self-join on subject double-scanned the content and
     paid a join exchange for columns the parser already had in hand."""
     import glob
-    import tempfile
     import time
 
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.sources.email_codec import parse_email_headers
     from apache_nifi_spark.streaming.smtp import put_smtp
 
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 110 == 0)
+    o = _smtp_orders(spark, sf_dir)
     to = F.concat(
         F.lit("customer"), F.col("o_custkey").cast("string"), F.lit("@example.com")
     )
@@ -3716,9 +3696,7 @@ def listen_smtp_q(spark, sf_dir):
     # ~1 connection per 400 recipients between 8 and the 32-connection
     # budget.  Deterministic hash repartition on the recipient (keyed,
     # not round-robin — task retries re-send the same partition).
-    if sf_dir not in _SMTP_MSG_COUNT:
-        _SMTP_MSG_COUNT[sf_dir] = o.count()  # control-plane scalar
-    n_msgs = _SMTP_MSG_COUNT[sf_dir]
+    n_msgs = _staged_smtp_msg_count(spark, sf_dir)
     pool = max(8, min(32, n_msgs // 400))
     rendered = o.select(
         F.lit("noreply@engine.local").alias("from_addr"),
@@ -3727,8 +3705,8 @@ def listen_smtp_q(spark, sf_dir):
             "noreply@engine.local", to, subject, F.col("o_orderdate"), body
         ).cast("binary").alias("message"),
     ).repartition(pool, "to_addr")
-    landing = tempfile.mkdtemp(prefix="anspark_smtp_")
-    srv = _shared_smtp(landing)
+    srv = _staged_smtp(spark, sf_dir)
+    srv.landing_dir = landing = session_dir(spark, "smtp")
     n = put_smtp(rendered, "127.0.0.1", srv.port).filter("delivered").count()
     assert n == n_msgs
     deadline = time.monotonic() + 15
@@ -4282,7 +4260,6 @@ def put_websocket_roundtrip_q(spark, sf_dir):
     equality proves handshake → mask → frame → land is lossless
     (streaming/websocket.py)."""
     import glob
-    import tempfile
     import time
 
     from apache_nifi_spark.streaming.websocket import (
@@ -4299,7 +4276,7 @@ def put_websocket_roundtrip_q(spark, sf_dir):
             F.col("value").cast("string"),
         ).alias("content")
     )
-    landing = tempfile.mkdtemp(prefix="anspark_putws_")
+    landing = session_dir(spark, "putws")
     server = WebSocketLandingServer(landing)
     n_sent = (
         put_websocket(lines, "127.0.0.1", server.port, "content")
@@ -4847,28 +4824,19 @@ def text_char_entropy_q(spark, sf_dir):
     )
 
 
-_PRUNED_DIR: dict[str, str] = {}
-
-
+@staged
 def _staged_partitioned_orders(spark, sf_dir: str) -> str:
     """One-time partitioned layout (hive-style dirs by o_orderstatus) for
     the partition-pruning read demo — the write is the amortized layout
     build, mirroring `_staged_bucketed_tables`."""
-    path = _PRUNED_DIR.get(sf_dir)
-    import os as _os
-    if path and _os.path.isdir(path):
-        return path
-    import tempfile
-
     from apache_nifi_spark.sources import write_records
 
     orders = _t(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="anspark_pruned_")
+    path = session_dir(spark, "pruned")
     write_records(
         orders.repartition("o_orderstatus"), path, "parquet",
         partition_by=["o_orderstatus"],
     )
-    _PRUNED_DIR[sf_dir] = path
     return path
 
 
@@ -5134,16 +5102,12 @@ def retry_flowfile_q(spark, sf_dir):
     )
 
 
-_ECHO_PORT: list[int] = []
-
-
-def _staged_echo_server() -> int:
-    """Process-lifetime deterministic echo endpoint for the InvokeHTTP
+@staged
+def _staged_echo_server(spark, sf_dir):
+    """Session-lifetime deterministic echo endpoint for the InvokeHTTP
     demo: GET /rev?x=<s> → reverse(<s>).  Stands in for the enrichment
     service a real flow would call; daemon-threaded stdlib server, same
     staging pattern as the rolling-log/bucketed fixtures."""
-    if _ECHO_PORT:
-        return _ECHO_PORT[0]
     import urllib.parse
 
     from apache_nifi_spark.streaming.wire_server import HttpHandler, HttpServer
@@ -5158,8 +5122,7 @@ def _staged_echo_server() -> int:
             self.end_headers()
             self.wfile.write(body)
 
-    _ECHO_PORT.append(HttpServer(Handler).start().port)
-    return _ECHO_PORT[0]
+    return HttpServer(Handler).start()
 
 
 @register(
@@ -5178,7 +5141,7 @@ def invoke_http_enrich_q(spark, sf_dir):
     The oracle recomputes the enrichment function in SQL."""
     from apache_nifi_spark.operators import invoke_http
 
-    port = _staged_echo_server()
+    port = _staged_echo_server(spark, sf_dir).port
     c = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200).select(
         "c_custkey", "c_name"
     )
@@ -5374,8 +5337,6 @@ def url_normalize_q(spark, sf_dir):
     return out.select("doc_id", "url_norm")
 
 
-_DERBY_URL: dict[str, str] = {}
-
 #: Spark bundles embedded Derby (its Hive-metastore store); it doubles as
 #: a REAL JDBC endpoint for the ExecuteSQL/PutDatabaseRecord path in this
 #: single-JVM environment.  On a cluster the url swaps to any networked
@@ -5383,23 +5344,18 @@ _DERBY_URL: dict[str, str] = {}
 _DERBY_DRIVER = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
 
+@staged
 def _staged_derby_supplier(spark, sf_dir: str) -> str:
     """One-time PutDatabaseRecord staging: supplier → embedded Derby
     (same amortized-fixture pattern as the bucketed/rolling stagers)."""
-    url = _DERBY_URL.get(sf_dir)
-    if url:
-        return url
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_write
 
-    db = tempfile.mkdtemp(prefix="anspark_derby_") + "/db"
+    db = session_dir(spark, "derby") + "/db"
     url = f"jdbc:derby:{db};create=true"
     sup = _t(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
     jdbc_write(sup, url, "supplier_db", options=_DERBY_DRIVER)
-    _DERBY_URL[sf_dir] = url
     return url
 
 
@@ -5458,11 +5414,9 @@ def update_database_table_q(spark, sf_dir):
     column, v2 rows carry values — value-exact vs the fixture.  DDL is
     O(new columns) driver-side control-plane, like the NiFi processor;
     data writes stay parallel (sources/jdbc.update_database_table)."""
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_read, jdbc_write, update_database_table
 
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='anspark_ddl_')}/evolve;create=true"
+    url = f"jdbc:derby:{session_dir(spark, 'ddl')}/evolve;create=true"
     p = _t(spark, sf_dir, "part")
     v1 = p.filter(F.col("p_partkey") < 100).select("p_partkey")
     v2 = p.filter((F.col("p_partkey") >= 100) & (F.col("p_partkey") < 200)).select(
@@ -5499,11 +5453,9 @@ def list_database_tables_q(spark, sf_dir):
     catalog — here a fresh Derby with two staged tables — into the
     listing DataFrame that downstream per-table fetch plans fan out
     over (sources/jdbc.list_database_tables)."""
-    import tempfile
-
     from apache_nifi_spark.sources import list_database_tables, update_database_table
 
-    url = f"jdbc:derby:{tempfile.mkdtemp(prefix='anspark_lst_')}/cat;create=true"
+    url = f"jdbc:derby:{session_dir(spark, 'lst')}/cat;create=true"
     ev = _t(spark, sf_dir, "events").select("event_id").limit(1)
     update_database_table(spark, url, "t_alpha", ev.schema)
     update_database_table(spark, url, "t_beta", ev.schema)
@@ -5525,12 +5477,10 @@ def query_db_incremental_q(spark, sf_dir):
     the delta (predicate pushed into the database).  The union of both
     polls must equal the full slice, value-exact.  State here is the
     returned max; NiFi keeps the same value in its state manager."""
-    import tempfile
-
     from apache_nifi_spark.sources import incremental_fetch, jdbc_write
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderstatus")
-    db = tempfile.mkdtemp(prefix="anspark_derby_inc_") + "/db"
+    db = session_dir(spark, "derby_inc") + "/db"
     url = f"jdbc:derby:{db};create=true"
     jdbc_write(o.filter(F.col("o_orderkey") < 1000), url, "orders_inc", options=_DERBY_DRIVER)
     # Each poll MATERIALIZES when it runs (in NiFi the processor executes,
@@ -5563,17 +5513,15 @@ def stream_put_database_q(spark, sf_dir):
     delete-then-insert idempotency (checkpoint + idempotent sink =
     exactly-once; see streaming/jdbc_sink).  The read-back over JDBC
     must match the batch slice value-exactly."""
-    import tempfile
-
     from apache_nifi_spark.sources import jdbc_read
     from apache_nifi_spark.streaming import stream_events, stream_to_jdbc
 
-    db = tempfile.mkdtemp(prefix="anspark_derby_sink_") + "/db"
+    db = session_dir(spark, "derby_sink") + "/db"
     url = f"jdbc:derby:{db};create=true"
     sdf = stream_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     ).select("event_id", "user_id", "event_type")
-    cp = tempfile.mkdtemp(prefix="anspark_derby_sink_cp_")
+    cp = session_dir(spark, "derby_sink_cp")
     stream_to_jdbc(sdf, url, "purchases_db", cp, options=_DERBY_DRIVER)
     back = jdbc_read(
         spark,

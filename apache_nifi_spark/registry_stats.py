@@ -27,6 +27,7 @@ from apache_nifi_spark.registry import (
     _t,
     register,
 )
+from apache_nifi_spark.staging import session_dir, staged
 
 # =====================================================================
 # Round 13: dense HyperLogLog (value-oracled), readability scoring,
@@ -599,7 +600,6 @@ def stream_delta_append_commits_q(spark, sf_dir):
     exactly what the stream wrote."""
     import glob
     import os as _os
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         read_delta_snapshot,
@@ -607,7 +607,7 @@ def stream_delta_append_commits_q(spark, sf_dir):
     )
     from apache_nifi_spark.streaming import stream_events
 
-    root = tempfile.mkdtemp(prefix="anspark_stream_delta_")
+    root = session_dir(spark, "stream_delta")
     sdf = (
         stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -636,7 +636,7 @@ def stream_delta_append_commits_q(spark, sf_dir):
         ]
         write_commit(root, version, actions)
 
-    cp = tempfile.mkdtemp(prefix="anspark_stream_delta_cp_")
+    cp = session_dir(spark, "stream_delta_cp")
     (
         sdf.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", cp)
@@ -1107,7 +1107,6 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
     to exactly the batch answer."""
     import glob
     import os as _os
-    import tempfile
 
     from apache_nifi_spark.sources.deltalog import (
         _delta_active_rows,
@@ -1118,7 +1117,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
 
     # stage the purchase stream as 3 files so the drain is genuinely
     # multi-batch (one file per trigger)
-    staged = tempfile.mkdtemp(prefix="anspark_updelta_src_")
+    staged = session_dir(spark, "updelta_src")
     (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -1126,7 +1125,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
         .repartition(3, "user_id")
         .write.mode("overwrite").parquet(staged)
     )
-    root = tempfile.mkdtemp(prefix="anspark_updelta_tbl_")
+    root = session_dir(spark, "updelta_tbl")
 
     def write_batch(bdf, bid):
         version = int(bid) + 1
@@ -1206,7 +1205,7 @@ def stream_delta_upsert_merge_q(spark, sf_dir):
         )
         write_commit(root, version, actions)
 
-    cp = tempfile.mkdtemp(prefix="anspark_updelta_cp_")
+    cp = session_dir(spark, "updelta_cp")
     sdf = stream_events(spark, sf_dir, path=staged, max_files_per_trigger=1)
     (
         sdf.writeStream.foreachBatch(write_batch)

@@ -110,6 +110,13 @@ def get_spark(
                 + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
             ).strip(),
         )
+        # Python workers import this package (pandas UDFs,
+        # applyInPandasWithState); point them at its parent dir so they
+        # find it whatever directory the driver started from.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -21,6 +21,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.staging import session_dir, staged
+
 #: serializes every drain that scopes spark.sql.shuffle.partitions — the
 #: session conf is process-global, so the save/set/restore must not
 #: interleave across threads (round-10 advice)
@@ -28,8 +30,19 @@ _SHUFFLE_OVERRIDE_LOCK = threading.Lock()
 _NO_LOCK = contextlib.nullcontext()
 
 
-#: file path → (landing dir, schema); see stream_events staging note.
-_LANDING_CACHE: dict[str, tuple[str, "object"]] = {}
+@staged
+def stage_landing(spark: SparkSession, src: str):
+    """(landing dir, schema) for a single-file source: FileStreamSource
+    wants a directory (the landing zone, §3.2), so the file is staged
+    via symlink — zero data copy.  Staged once per source file: queries
+    that open the same stream twice (self-union dedup, stream-stream
+    joins) and repeated bench runs reuse the landing dir and the
+    footer-read schema."""
+    landing = session_dir(spark, "landing")
+    # abspath: a relative sf_dir would otherwise create a symlink
+    # resolved relative to the LANDING dir — silently broken
+    os.symlink(os.path.abspath(src), os.path.join(landing, os.path.basename(src)))
+    return landing, spark.read.parquet(landing).schema
 
 
 def stream_events(
@@ -47,20 +60,7 @@ def stream_events(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = path or f"{sf_dir}/events.parquet"
     if os.path.isfile(src):
-        # FileStreamSource wants a directory (the landing zone, §3.2); a
-        # single-file fixture is staged via symlink — zero data copy.
-        # Staged once per source file: queries that open the same stream
-        # twice (self-union dedup, stream-stream joins) and repeated bench
-        # runs reuse the landing dir and the footer-read schema.
-        cached = _LANDING_CACHE.get(src)
-        if cached is None or not os.path.isdir(cached[0]):
-            landing = tempfile.mkdtemp(prefix="anspark_landing_")
-            # abspath: a relative sf_dir would otherwise create a symlink
-            # resolved relative to the LANDING dir — silently broken
-            os.symlink(os.path.abspath(src), os.path.join(landing, os.path.basename(src)))
-            cached = (landing, spark.read.parquet(landing).schema)
-            _LANDING_CACHE[src] = cached
-        src, schema = cached
+        src, schema = stage_landing(spark, src)
     else:
         schema = spark.read.parquet(src).schema  # footer read only
     reader = spark.readStream.schema(schema).format("parquet")
@@ -88,7 +88,9 @@ def run_to_memory(
     memory sink → return the materialized table.
 
     The checkpoint directory plays the FlowFile-repository role
-    (SURVEY.md §1.1); a fresh one per run keeps invocations independent.
+    (SURVEY.md §1.1); a fresh one per run keeps invocations independent,
+    and it lives only as long as the drain — the memory sink never reads
+    it after ``awaitTermination``.
 
     ``shuffle_partitions`` scopes the state-store count to the drain:
     every stateful operator instantiates one store PER shuffle
@@ -122,7 +124,6 @@ def run_to_memory(
     is reclaimed on a drain-and-stop run, never what is emitted.
     """
     name = query_name or f"q_{uuid.uuid4().hex[:12]}"
-    cp = tempfile.mkdtemp(prefix="anspark_cp_")
     sess = sdf.sparkSession
     key = "spark.sql.shuffle.partitions"
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -136,7 +137,9 @@ def run_to_memory(
     # would otherwise create.
     scoped = shuffle_partitions is not None or not final_no_data_batch
     guard = _SHUFFLE_OVERRIDE_LOCK if scoped else _NO_LOCK
-    with guard:
+    with guard, tempfile.TemporaryDirectory(
+        prefix="anspark_cp_", ignore_cleanup_errors=True
+    ) as cp:
         old = sess.conf.get(key)
         old_nodata = sess.conf.get(nodata_key, "true")
         if shuffle_partitions is not None:

@@ -90,7 +90,7 @@ def run_bench(sf_dir: str) -> dict:
 
     # Flow-compile warm-up, billed to its own row (round-14 verdict
     # item 1): the mega-flow query families share ONE flow
-    # compile+landing per (session, sf_dir) (_MEGA_CACHE/_MEGA2_CACHE)
+    # compile+landing per (session, sf_dir) (the @staged _mega/_mega2)
     # — without this, whichever family member runs FIRST absorbs that
     # one-time cost inside its timed runs (mega2_lookup_xpath_xquery
     # read 8.8-15.1 s in the r14 receipt vs 1.3 s warm).  The helpers
@@ -101,8 +101,8 @@ def run_bench(sf_dir: str) -> dict:
     try:
         from apache_nifi_spark import registry_flows as _rf
 
-        _rf._mega(spark, sf_dir, "OrdersAgg.byStatus")
-        _rf._mega2(spark, sf_dir, "LookupAgg.agg")
+        _rf._mega(spark, sf_dir)
+        _rf._mega2(spark, sf_dir)
     except Exception:  # noqa: BLE001 — warm-up must never fail the run
         pass
     timings["flow_compile_amortized"] = round(time.perf_counter() - t0, 4)
