@@ -1,8 +1,8 @@
 """ValidateJson (§2.3 [2.7.2-surface]: validate raw JSON documents
 against a JSON Schema, route valid/invalid with the first violation).
 
-A JSON-Schema SUBSET compiles to column predicates in ONE traversal that
-emits BOTH backends — a Spark ``Column`` over the variant encoding
+A JSON-Schema SUBSET compiles to predicates in ONE traversal that emits
+BOTH backends — Spark SQL text over the variant encoding
 (``try_parse_json`` + ``try_variant_get`` + ``schema_of_variant``) and
 the equivalent DuckDB SQL over ``json_type``/``json_extract`` — so the
 oracle checks the pipeline, not two independent validator
@@ -48,7 +48,9 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
+
+from apache_nifi_spark.sqltext import ident, lit, projection
 
 __all__ = ["json_schema_sql", "validate_json"]
 
@@ -62,14 +64,14 @@ def _sql_quote(s: str) -> str:
 
 class _Rule:
     """One compiled check: label + an ok-predicate per backend.  The
-    Spark side is a thunk so SQL-only compilation never imports a live
-    session's functions."""
+    Spark side is a thunk because it registers the staged columns it
+    reads, which SQL-only compilation has no builder for."""
 
-    __slots__ = ("label", "ok_col", "ok_sql")
+    __slots__ = ("label", "ok_spark", "ok_sql")
 
-    def __init__(self, label: str, ok_col: Callable[[], Column] | None, ok_sql: str):
+    def __init__(self, label: str, ok_spark: Callable[[], str] | None, ok_sql: str):
         self.label = label
-        self.ok_col = ok_col
+        self.ok_spark = ok_spark
         self.ok_sql = ok_sql
 
 
@@ -89,97 +91,101 @@ def _canon_sql(doc: str, path: str) -> str:
         ELSE 'object' END)"""
 
 
+#: a variant's schema string for an integral decimal (``DECIMAL(p,0)``)
+_DECIMAL_0 = lit(r"^DECIMAL\(\d+,0\)$")
+
+
 class _SparkSide:
-    """Builders over one document column (imported only when the Spark
-    backend is actually requested).
+    """Spark SQL text builders over the parsed document ``_jsroot``.
 
-    Every shared subexpression — the parsed variant root, each path's
-    variant/canonical-type/string value — REGISTERS as a named column
-    instead of inlining, and the caller stages those registrations as
-    real projections.  Variant functions don't whole-stage-codegen, so
-    Spark's subexpression elimination never dedupes them; without the
-    staging, a 20-rule schema re-parses the document dozens of times per
-    row (measured 8.8 s → 0.6 s at sf0.1 for the registry fixture).
-    Multiply-referenced non-cheap aliases also stop CollapseProject from
-    re-inlining them."""
+    Every shared subexpression — each path's variant/canonical-type/string
+    value — REGISTERS as a named column instead of inlining, and the
+    caller stages those registrations as real projections.  Variant
+    functions don't whole-stage-codegen, so Spark's subexpression
+    elimination never dedupes them; without the staging, a 20-rule schema
+    re-parses the document dozens of times per row (measured 8.8 s → 0.6 s
+    at sf0.1 for the registry fixture).  Multiply-referenced non-cheap
+    aliases also stop CollapseProject from re-inlining them."""
 
-    def __init__(self, doc_col: str):
-        from pyspark.sql import functions as F
-
-        self.F = F
-        self.doc_col = doc_col
-        self.root = F.col("_jsroot")
-        #: registration stages: name -> expr, in dependency order
-        self.var_regs: dict[str, Column] = {}
-        self.type_regs: dict[str, Column] = {}
-        self.derived_regs: dict[str, Column] = {}
+    def __init__(self):
+        #: registration stages: name -> SQL expression, in dependency order
+        self.var_regs: dict[str, str] = {}
+        self.type_regs: dict[str, str] = {}
+        self.derived_regs: dict[str, str] = {}
         self._var_names: dict[str, str] = {}
         self._canon_names: dict[str, str] = {}
         self._str_names: dict[str, str] = {}
 
-    def var(self, path: str) -> Column:
-        F = self.F
+    def var(self, path: str) -> str:
         name = self._var_names.get(path)
         if name is None:
             name = f"_v{len(self._var_names)}"
             self._var_names[path] = name
-            self.var_regs[name] = F.try_variant_get(self.root, path, "variant")
-        return F.col(name)
+            self.var_regs[name] = f"try_variant_get(_jsroot, {lit(path)}, 'variant')"
+        return name
 
-    def _vtype(self, path: str) -> Column:
+    def _vtype(self, path: str) -> str:
         """The variant's schema string, staged once per path —
         schema_of_variant walks the variant binary on every call, and a
         canon CASE references the type seven times."""
-        F = self.F
         var = self.var(path)  # ensures registration + stable name
-        name = f"_t{self._var_names[path][2:]}"
-        if name not in self.type_regs:
-            self.type_regs[name] = F.schema_of_variant(var)
-        return F.col(name)
+        name = f"_t{var[2:]}"
+        self.type_regs.setdefault(name, f"schema_of_variant({var})")
+        return name
 
-    def canon(self, path: str) -> Column:
-        F = self.F
+    def canon(self, path: str) -> str:
         name = self._canon_names.get(path)
         if name is None:
             var = self.var(path)
             t = self._vtype(path)
-            expr = (
-                F.when(var.isNull(), F.lit("missing"))
-                .when(F.is_variant_null(var), F.lit("null"))
-                .when(t == "BIGINT", F.lit("integer"))
-                .when(t.rlike(r"^DECIMAL\(\d+,0\)$"), F.lit("integer"))
-                .when(t.startswith("DECIMAL") | (t == "DOUBLE"), F.lit("number"))
-                .when(t == "STRING", F.lit("string"))
-                .when(t == "BOOLEAN", F.lit("boolean"))
-                .when(t.startswith("ARRAY"), F.lit("array"))
-                .otherwise(F.lit("object"))
-            )
             name = f"_c{len(self._canon_names)}"
             self._canon_names[path] = name
-            self.derived_regs[name] = expr
-        return F.col(name)
+            self.derived_regs[name] = (
+                f"CASE WHEN {var} IS NULL THEN 'missing'"
+                f" WHEN is_variant_null({var}) THEN 'null'"
+                f" WHEN {t} = 'BIGINT' THEN 'integer'"
+                f" WHEN {t} RLIKE {_DECIMAL_0} THEN 'integer'"
+                f" WHEN startswith({t}, 'DECIMAL') OR {t} = 'DOUBLE' THEN 'number'"
+                f" WHEN {t} = 'STRING' THEN 'string'"
+                f" WHEN {t} = 'BOOLEAN' THEN 'boolean'"
+                f" WHEN startswith({t}, 'ARRAY') THEN 'array'"
+                " ELSE 'object' END"
+            )
+        return name
 
-    def num(self, path: str) -> Column:
-        F = self.F
-        return F.when(
-            self.canon(path).isin("integer", "number"),
-            F.try_variant_get(self.root, path, "double"),
+    def num(self, path: str) -> str:
+        return (
+            f"CASE WHEN {self.canon(path)} IN ('integer', 'number')"
+            f" THEN try_variant_get(_jsroot, {lit(path)}, 'double') END"
         )
 
-    def s(self, path: str) -> Column:
-        F = self.F
+    def s(self, path: str) -> str:
         name = self._str_names.get(path)
         if name is None:
             name = f"_s{len(self._str_names)}"
             self._str_names[path] = name
-            self.var_regs[name] = F.try_variant_get(self.root, path, "string")
-        return F.col(name)
+            self.var_regs[name] = f"try_variant_get(_jsroot, {lit(path)}, 'string')"
+        return name
 
-    def arr_len(self, path: str) -> Column:
-        F = self.F
-        return F.json_array_length(
-            F.when(self.canon(path) == "array", F.to_json(self.var(path)))
+    def arr_len(self, path: str) -> str:
+        return (
+            f"json_array_length(CASE WHEN {self.canon(path)} = 'array'"
+            f" THEN to_json({self.var(path)}) END)"
         )
+
+
+def _is_or_missing(canon: str, accepted: tuple[str, ...]) -> str:
+    return f"({canon} IN ({', '.join(map(lit, accepted))}) OR {canon} = 'missing')"
+
+
+def _off_type(sp: _SparkSide, path: str, typ: str, ok: str) -> str:
+    """``ok``, vacuous unless the value at ``path`` has JSON type ``typ``."""
+    return f"({sp.canon(path)} != {lit(typ)} OR {ok})"
+
+
+def _off_number(sp: _SparkSide, path: str, ok: str) -> str:
+    """``ok``, vacuous unless the value at ``path`` is a number."""
+    return f"(NOT ({sp.canon(path)} IN ('integer', 'number')) OR {ok})"
 
 
 def _resolve_ref(root: dict, ref: str) -> dict:
@@ -222,8 +228,8 @@ def _compile(
         f" THEN json_array_length({doc_sql}, {qp}) END)"
     )
 
-    def add(label: str, col_thunk: Callable[[], Column] | None, sql: str) -> None:
-        rules.append(_Rule(f"{label}:{path}", col_thunk if sp else None, sql))
+    def add(label: str, spark_thunk: Callable[[], str] | None, sql: str) -> None:
+        rules.append(_Rule(f"{label}:{path}", spark_thunk if sp else None, sql))
 
     # --- composition: $ref / allOf apply in place (draft 2020-12 keeps
     # sibling keywords alongside, so these simply prepend their rules)
@@ -241,8 +247,7 @@ def _compile(
         accepted = sorted({"integer", "number"} if typ == "number" else {typ})
         add(
             "type",
-            lambda accepted=tuple(accepted): sp.canon(path).isin(*accepted)
-            | (sp.canon(path) == "missing"),
+            lambda accepted=tuple(accepted): _is_or_missing(sp.canon(path), accepted),
             f"({canon_sql} IN ({', '.join(_sql_quote(a) for a in accepted)})"
             f" OR {canon_sql} = 'missing')",
         )
@@ -254,7 +259,7 @@ def _compile(
         rules.append(
             _Rule(
                 f"required:{sub}",
-                (lambda sub=sub: (sp.canon(path) != "object") | sp.var(sub).isNotNull())
+                (lambda sub=sub: f"({sp.canon(path)} != 'object' OR {sp.var(sub)} IS NOT NULL)")
                 if sp
                 else None,
                 f"({canon_sql} <> 'object'"
@@ -266,28 +271,28 @@ def _compile(
         m = float(schema["minimum"])
         add(
             "minimum",
-            lambda m=m: ~sp.canon(path).isin("integer", "number") | (sp.num(path) >= m),
+            lambda m=m: _off_number(sp, path, f"{sp.num(path)} >= {lit(m)}"),
             f"({canon_sql} NOT IN ('integer', 'number') OR {num_sql} >= {m})",
         )
     if "maximum" in schema:
         m = float(schema["maximum"])
         add(
             "maximum",
-            lambda m=m: ~sp.canon(path).isin("integer", "number") | (sp.num(path) <= m),
+            lambda m=m: _off_number(sp, path, f"{sp.num(path)} <= {lit(m)}"),
             f"({canon_sql} NOT IN ('integer', 'number') OR {num_sql} <= {m})",
         )
     if "exclusiveMinimum" in schema:
         m = float(schema["exclusiveMinimum"])
         add(
             "exclusiveMinimum",
-            lambda m=m: ~sp.canon(path).isin("integer", "number") | (sp.num(path) > m),
+            lambda m=m: _off_number(sp, path, f"{sp.num(path)} > {lit(m)}"),
             f"({canon_sql} NOT IN ('integer', 'number') OR {num_sql} > {m})",
         )
     if "exclusiveMaximum" in schema:
         m = float(schema["exclusiveMaximum"])
         add(
             "exclusiveMaximum",
-            lambda m=m: ~sp.canon(path).isin("integer", "number") | (sp.num(path) < m),
+            lambda m=m: _off_number(sp, path, f"{sp.num(path)} < {lit(m)}"),
             f"({canon_sql} NOT IN ('integer', 'number') OR {num_sql} < {m})",
         )
     if "multipleOf" in schema:
@@ -298,8 +303,7 @@ def _compile(
         # check both engines share (the common integral-divisor case)
         add(
             "multipleOf",
-            lambda m=m: ~sp.canon(path).isin("integer", "number")
-            | (sp.num(path) % m == 0.0),
+            lambda m=m: _off_number(sp, path, f"{sp.num(path)} % {lit(m)} = 0.0D"),
             f"({canon_sql} NOT IN ('integer', 'number') OR fmod({num_sql}, {m}) = 0)",
         )
     if "const" in schema:
@@ -307,7 +311,7 @@ def _compile(
         if isinstance(cv, str):
             add(
                 "const",
-                lambda cv=cv: (sp.canon(path) != "string") | (sp.s(path) == cv),
+                lambda cv=cv: _off_type(sp, path, "string", f"{sp.s(path)} = {lit(cv)}"),
                 f"(NOT {is_str_sql} OR {str_sql} = {_sql_quote(cv)})",
             )
         elif isinstance(cv, bool) or not isinstance(cv, (int, float)):
@@ -315,8 +319,7 @@ def _compile(
         else:
             add(
                 "const",
-                lambda cv=float(cv): ~sp.canon(path).isin("integer", "number")
-                | (sp.num(path) == cv),
+                lambda cv=float(cv): _off_number(sp, path, f"{sp.num(path)} = {lit(cv)}"),
                 f"({canon_sql} NOT IN ('integer', 'number')"
                 f" OR {num_sql} = {float(cv)})",
             )
@@ -326,8 +329,7 @@ def _compile(
         accepted = ("string",) if expected == "string" else ("integer", "number")
         add(
             "const-type",
-            lambda accepted=accepted: sp.canon(path).isin(*accepted)
-            | (sp.canon(path) == "missing"),
+            lambda accepted=accepted: _is_or_missing(sp.canon(path), accepted),
             f"({canon_sql} IN ({', '.join(_sql_quote(a) for a in accepted)})"
             f" OR {canon_sql} = 'missing')",
         )
@@ -337,19 +339,11 @@ def _compile(
         # array<string> parse would conflate them)
         add(
             "uniqueItems",
-            lambda: (sp.canon(path) != "array")
-            | (
-                sp.F.size(
-                    sp.F.array_distinct(
-                        sp.F.transform(
-                            sp.F.from_json(
-                                sp.F.to_json(sp.var(path)), "array<variant>"
-                            ),
-                            lambda v: sp.F.to_json(v),
-                        )
-                    )
-                )
-                == sp.arr_len(path)
+            lambda: _off_type(
+                sp, path, "array",
+                "size(array_distinct(transform(from_json("
+                f"to_json({sp.var(path)}), 'array<variant>'), v -> to_json(v))))"
+                f" = {sp.arr_len(path)}",
             ),
             f"({canon_sql} <> 'array' OR"
             f" len(list_distinct(CAST(json_extract({doc_sql}, {qp})"
@@ -359,21 +353,21 @@ def _compile(
         n = int(schema["minLength"])
         add(
             "minLength",
-            lambda n=n: (sp.canon(path) != "string") | (sp.F.length(sp.s(path)) >= n),
+            lambda n=n: _off_type(sp, path, "string", f"length({sp.s(path)}) >= {n}"),
             f"(NOT {is_str_sql} OR length({str_sql}) >= {n})",
         )
     if "maxLength" in schema:
         n = int(schema["maxLength"])
         add(
             "maxLength",
-            lambda n=n: (sp.canon(path) != "string") | (sp.F.length(sp.s(path)) <= n),
+            lambda n=n: _off_type(sp, path, "string", f"length({sp.s(path)}) <= {n}"),
             f"(NOT {is_str_sql} OR length({str_sql}) <= {n})",
         )
     if "pattern" in schema:
         pat = schema["pattern"]
         add(
             "pattern",
-            lambda pat=pat: (sp.canon(path) != "string") | sp.s(path).rlike(pat),
+            lambda pat=pat: _off_type(sp, path, "string", f"{sp.s(path)} RLIKE {lit(pat)}"),
             f"(NOT {is_str_sql} OR regexp_matches({str_sql}, {_sql_quote(pat)}))",
         )
     if "enum" in schema:
@@ -382,7 +376,9 @@ def _compile(
             raise ValueError(f"enum at {path}: only string enums supported")
         add(
             "enum",
-            lambda vals=tuple(vals): (sp.canon(path) != "string") | sp.s(path).isin(*vals),
+            lambda vals=tuple(vals): _off_type(
+                sp, path, "string", f"{sp.s(path)} IN ({', '.join(map(lit, vals))})"
+            ),
             f"(NOT {is_str_sql} OR {str_sql} IN"
             f" ({', '.join(_sql_quote(v) for v in vals)}))",
         )
@@ -390,14 +386,14 @@ def _compile(
         n = int(schema["minItems"])
         add(
             "minItems",
-            lambda n=n: (sp.canon(path) != "array") | (sp.arr_len(path) >= n),
+            lambda n=n: _off_type(sp, path, "array", f"{sp.arr_len(path)} >= {n}"),
             f"({canon_sql} <> 'array' OR {arr_len_sql} >= {n})",
         )
     if "maxItems" in schema:
         n = int(schema["maxItems"])
         add(
             "maxItems",
-            lambda n=n: (sp.canon(path) != "array") | (sp.arr_len(path) <= n),
+            lambda n=n: _off_type(sp, path, "array", f"{sp.arr_len(path)} <= {n}"),
             f"({canon_sql} <> 'array' OR {arr_len_sql} <= {n})",
         )
     if "items" in schema:
@@ -424,29 +420,20 @@ def _compile(
             _compile(sub, sp, doc_sql, path, sub_rules, root, depth + 1)
             branches.append(sub_rules)
 
-        def branch_col(sub_rules: list[_Rule]) -> Column:
-            g = None
-            for r in sub_rules:
-                c = r.ok_col()
-                g = c if g is None else g & c
-            return sp.F.lit(True) if g is None else g
+        def branch_sql(sub_rules: list[_Rule]) -> str:
+            return " AND ".join(r.ok_spark() for r in sub_rules) or "TRUE"
 
-        def combined(branches=branches, kw=kw) -> Column:
+        def combined(branches=branches, kw=kw) -> str:
             # vacuous when the location doesn't exist (spec: validation
             # applies to existing instances only — without this, a
             # missing field would fail oneOf because several type-only
             # branches pass vacuously)
-            vac = sp.canon(path) == "missing"
-            groups = [branch_col(b) for b in branches]
+            vac = f"{sp.canon(path)} = 'missing'"
+            groups = [f"({branch_sql(b)})" for b in branches]
             if kw == "anyOf":
-                acc = groups[0]
-                for g in groups[1:]:
-                    acc = acc | g
-                return vac | acc
-            total = groups[0].cast("int")
-            for g in groups[1:]:
-                total = total + g.cast("int")
-            return vac | (total == 1)
+                return f"({vac} OR ({' OR '.join(groups)}))"
+            total = " + ".join(f"CAST({g} AS INT)" for g in groups)
+            return f"({vac} OR ({total}) = 1)"
 
         group_sqls = [
             "(" + (" AND ".join(r.ok_sql for r in b) if b else "TRUE") + ")"
@@ -485,30 +472,29 @@ def json_schema_sql(schema: dict, doc_sql: str) -> tuple[str, str]:
     return f"({valid_sql})", "(CASE " + " ".join(err_parts) + " ELSE NULL END)"
 
 
-def _optimizer_fence(F) -> Column:
-    """A non-deterministic, ALWAYS-TRUE boolean term.
-
-    Why it exists: Catalyst's ``PushPredicateThroughNonJoin`` pushes a
-    downstream ``Filter`` through a ``Project`` by substituting every
-    referenced alias into the filter condition — *without* the
-    duplicate-expensive-expression guard that ``CollapseProject`` has.
-    A consumer doing ``validate_json(df, s).filter("valid")`` therefore
-    used to get the whole staged rule pipeline re-inlined into ONE
-    filter predicate: the executed plan held ~75 copies of the JSON
-    parse per row, all interpreted (variant expressions don't
-    whole-stage-codegen) — measured 24 s for 100k rows at sf0.1 vs
-    ~0.6 s with staging intact.
-
-    The fence blocks that: the pushdown rule requires
-    ``fields.forall(_.deterministic)`` on the Project, so one
-    non-deterministic field pins every downstream filter above the
-    staged projections.  ``spark_partition_id() >= -1`` is always true
-    (partition ids are non-negative) and survives the optimizer —
-    unlike ``rand()``-based terms, which Spark 4.1's rand-predicate
-    rewrite folds away, re-enabling the pushdown.  Cost: one
-    TaskContext read per row, JVM-side — nothing shuffles, nothing
-    leaves the executor."""
-    return F.spark_partition_id() >= F.lit(-1)
+#: A non-deterministic, ALWAYS-TRUE boolean term.
+#:
+#: Why it exists: Catalyst's ``PushPredicateThroughNonJoin`` pushes a
+#: downstream ``Filter`` through a ``Project`` by substituting every
+#: referenced alias into the filter condition — *without* the
+#: duplicate-expensive-expression guard that ``CollapseProject`` has.
+#: A consumer doing ``validate_json(df, s).filter("valid")`` therefore
+#: used to get the whole staged rule pipeline re-inlined into ONE
+#: filter predicate: the executed plan held ~75 copies of the JSON
+#: parse per row, all interpreted (variant expressions don't
+#: whole-stage-codegen) — measured 24 s for 100k rows at sf0.1 vs
+#: ~0.6 s with staging intact.
+#:
+#: The fence blocks that: the pushdown rule requires
+#: ``fields.forall(_.deterministic)`` on the Project, so one
+#: non-deterministic field pins every downstream filter above the
+#: staged projections.  ``spark_partition_id() >= -1`` is always true
+#: (partition ids are non-negative) and survives the optimizer —
+#: unlike ``rand()``-based terms, which Spark 4.1's rand-predicate
+#: rewrite folds away, re-enabling the pushdown.  Cost: one
+#: TaskContext read per row, JVM-side — nothing shuffles, nothing
+#: leaves the executor.
+_OPTIMIZER_FENCE = "spark_partition_id() >= -1"
 
 
 def validate_json(df: DataFrame, schema: dict, doc_col: str = "content") -> DataFrame:
@@ -520,30 +506,24 @@ def validate_json(df: DataFrame, schema: dict, doc_col: str = "content") -> Data
     per-path canonical types → one boolean per rule → valid + first
     violation.  Each stage is a real projection, so every shared
     subexpression evaluates once per row — and ``valid`` carries an
-    optimizer fence (see ``_optimizer_fence``) so a downstream filter
+    optimizer fence (see ``_OPTIMIZER_FENCE``) so a downstream filter
     can't collapse the stages back into one interpreted predicate."""
-    from pyspark.sql import functions as F
-
-    sp = _SparkSide(doc_col)
+    sp = _SparkSide()
     rules: list[_Rule] = []
     _compile(schema, sp, "ignored", "$", rules)
 
-    ok_cols = {f"_ok{i}": r.ok_col() for i, r in enumerate(rules)}
-    staged = (
-        df.withColumn("_jsroot", F.try_parse_json(F.col(doc_col)))
-        .withColumns(sp.var_regs)
-        .withColumns(sp.type_regs)
-        .withColumns(sp.derived_regs)
-        .withColumns(ok_cols)
+    oks = {f"_ok{i}": r.ok_spark() for i, r in enumerate(rules)}
+    staged = df.selectExpr("*", f"try_parse_json({ident(doc_col)}) AS _jsroot")
+    for stage in (sp.var_regs, sp.type_regs, sp.derived_regs, oks):
+        if stage:
+            staged = staged.selectExpr("*", *(f"{e} AS {n}" for n, e in stage.items()))
+    well = "_jsroot IS NOT NULL"
+    valid = " AND ".join([well, *oks, _OPTIMIZER_FENCE])
+    err = " ".join(
+        [f"CASE WHEN NOT ({well}) THEN 'malformed'"]
+        + [f"WHEN NOT {n} THEN {lit(r.label)}" for n, r in zip(oks, rules)]
+        + ["END"]
     )
-    well = F.col("_jsroot").isNotNull()
-    valid = well
-    for i in range(len(rules)):
-        valid = valid & F.col(f"_ok{i}")
-    valid = valid & _optimizer_fence(F)
-    err = F.when(~well, F.lit("malformed"))
-    for i, r in enumerate(rules):
-        err = err.when(~F.col(f"_ok{i}"), F.lit(r.label))
-    return staged.withColumns({"valid": valid, "validation_error": err}).drop(
-        "_jsroot", *sp.var_regs, *sp.type_regs, *sp.derived_regs, *ok_cols
+    return staged.selectExpr(
+        *projection(df.columns, {"valid": valid, "validation_error": err})
     )

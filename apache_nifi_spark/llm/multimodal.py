@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from apache_nifi_spark.sqltext import ident, lit
+
 __all__ = [
     "attach_binary_content",
     "identify_mime_type",
@@ -104,11 +106,11 @@ def identify_mime_type(
 ) -> DataFrame:
     """IdentifyMimeType: sniff magic bytes — pure column expressions
     (hex prefix + CASE), no UDF."""
-    prefix = F.hex(F.substring(F.col(content_col), 1, 8))
-    expr = F.lit("application/octet-stream")
-    for magic, mime in reversed(_MAGIC):
-        expr = F.when(prefix.startswith(magic), F.lit(mime)).otherwise(expr)
-    return df.withColumn(out_col, expr)
+    prefix = f"hex(substring({ident(content_col)}, 1, 8))"
+    whens = " ".join(
+        f"WHEN startswith({prefix}, {lit(magic)}) THEN {lit(mime)}" for magic, mime in _MAGIC
+    )
+    return df.withColumn(out_col, F.expr(f"CASE {whens} ELSE 'application/octet-stream' END"))
 
 
 #: output schema of the (stubbed) image feature extractor

@@ -18,6 +18,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.sqltext import ident, lit
+
 __all__ = [
     "cdc_apply_changes",
     "merge_record",
@@ -86,18 +88,16 @@ def calculate_record_stats(
     NiFi's per-FlowFile loop; emits (category, value, record_count) with the
     overall count under category='<total>'.
     """
-    pieces = [
-        df.groupBy(
-            F.lit(c).alias("category"), F.col(c).cast("string").alias("value")
-        ).agg(F.count(F.lit(1)).alias("record_count"))
-        for c in category_cols
-    ]
-    total = df.groupBy(
-        F.lit("<total>").alias("category"), F.lit("<total>").alias("value")
-    ).agg(F.count(F.lit(1)).alias("record_count"))
-    out = total
-    for p in pieces:
-        out = out.unionByName(p)
+    count = F.expr("count(1) AS record_count")
+    out = df.groupBy(
+        F.expr("'<total>' AS category"), F.expr("'<total>' AS value")
+    ).agg(count)
+    for c in category_cols:
+        out = out.unionByName(
+            df.groupBy(
+                F.expr(f"{lit(c)} AS category"), F.expr(f"CAST({ident(c)} AS STRING) AS value")
+            ).agg(count)
+        )
     return out
 
 
@@ -122,14 +122,11 @@ def deduplicate_record(
     """
     if keep_order_col is None:
         return df.dropDuplicates(list(keys))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(F.col(keep_order_col).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    rn = (
+        f"row_number() OVER (PARTITION BY {', '.join(map(ident, keys))}"
+        f" ORDER BY {ident(keep_order_col)} ASC)"
     )
+    return df.withColumn("__rn", F.expr(rn)).filter("__rn = 1").drop("__rn")
 
 
 def split_record(
@@ -137,11 +134,12 @@ def split_record(
 ) -> DataFrame:
     """SplitRecord/SplitJson/SplitText: one row per array element, emitting
     NiFi's ``fragment.index`` as a column when requested."""
+    keep = [ident(c) for c in df.columns if c != array_col]
     if with_index:
-        return df.select(
-            "*", F.posexplode(array_col).alias("fragment_index", out_col)
-        ).drop(array_col)
-    return df.select("*", F.explode(array_col).alias(out_col)).drop(array_col)
+        gen = f"posexplode({ident(array_col)}) AS (fragment_index, {ident(out_col)})"
+    else:
+        gen = f"explode({ident(array_col)}) AS {ident(out_col)}"
+    return df.selectExpr(*keep, gen)
 
 
 def cdc_apply_changes(

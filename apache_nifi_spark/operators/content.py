@@ -22,6 +22,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from apache_nifi_spark.sqltext import ident, lit
+
 __all__ = [
     "merge_content_text",
     "pack_content_zip",
@@ -178,23 +180,15 @@ def merge_content_text(
     """
     from pyspark.sql import functions as F
 
-    merged = F.concat(
-        F.lit(header),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(order_col).alias("o"),
-                                            F.col(content_col).alias("c")))
-                ),
-                lambda s: s["c"],
-            ),
-            demarcator,
-        ),
-        F.lit(footer),
+    ordered = (
+        f"array_sort(collect_list(struct({ident(order_col)} AS o, {ident(content_col)} AS c)))"
+    )
+    merged = (
+        f"concat({lit(header)}, array_join(transform({ordered}, s -> s.c),"
+        f" {lit(demarcator)}), {lit(footer)})"
     )
     return df.groupBy(group_col).agg(
-        merged.alias("merged_content"),
-        F.count(F.lit(1)).alias("fragment_count"),
+        F.expr(f"{merged} AS merged_content"), F.expr("count(1) AS fragment_count")
     )
 
 

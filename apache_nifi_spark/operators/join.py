@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.operators.route import sql_over_views
+
 __all__ = [
     "lookup_record",
     "lookup_split",
@@ -83,9 +85,8 @@ def join_enrichment_sql(
 ) -> DataFrame:
     """JoinEnrichment SQL strategy: user SQL over views ``original`` and
     ``enrichment`` (NiFi runs Calcite with exactly these two table names)."""
-    original.createOrReplaceTempView("original")
-    enrichment.createOrReplaceTempView("enrichment")
-    return spark.sql(sql)
+    views = {"original": original, "enrichment": enrichment}
+    return sql_over_views(spark, views, {"joined": sql})["joined"]
 
 
 def range_join(

@@ -16,10 +16,13 @@ then applies N pushed-down predicates — SURVEY.md §4.2 item 1.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from apache_nifi_spark.sqltext import ident, lit
 
 __all__ = [
     "route_on_attribute",
@@ -29,7 +32,25 @@ __all__ = [
     "validate_record",
     "distribute_load",
     "duplicate_flowfile",
+    "sql_over_views",
 ]
+
+#: Temp views are session-global, and REST compiles run concurrently: a
+#: thread binding ``FLOWFILE`` between another thread's bind and its
+#: ``spark.sql`` would hand that statement the wrong input.  Every
+#: "register view(s) + ``spark.sql``" pair holds this lock; ``spark.sql``
+#: analyzes eagerly, so a returned plan keeps its own inputs.
+_VIEW_LOCK = threading.Lock()
+
+
+def sql_over_views(
+    spark: SparkSession, views: Mapping[str, DataFrame], statements: Mapping[str, str]
+) -> dict[str, DataFrame]:
+    """Run each named SQL statement over ``views`` bound as temp views."""
+    with _VIEW_LOCK:
+        for view, df in views.items():
+            df.createOrReplaceTempView(view)
+        return {name: spark.sql(sql) for name, sql in statements.items()}
 
 
 def route_on_attribute(
@@ -92,8 +113,7 @@ def query_record(
     full pushdown into the underlying scan.  Far stronger at scale: one
     distributed plan instead of millions of per-file Calcite plans.
     """
-    df.createOrReplaceTempView(view_name)
-    return {name: spark.sql(sql) for name, sql in queries.items()}
+    return sql_over_views(spark, {view_name: df}, queries)
 
 
 def scan_attribute(
@@ -156,35 +176,39 @@ def distribute_load(
     total = sum(weights.values())
     if total <= 0 or any(w < 0 for w in weights.values()):
         raise ValueError("weights must be non-negative with a positive sum")
-    parted = df.repartitionByRange(F.col(order_col)).sortWithinPartitions(order_col)
-    mid = F.monotonically_increasing_id()
-    stamped = parted.withColumns(
-        {
-            "_dl_pid": F.shiftright(mid, 33).cast("int"),
-            "_dl_local": (mid.bitwiseAND(F.lit((1 << 33) - 1))).cast("bigint"),
-        }
+    order = ident(order_col)
+    mid = "monotonically_increasing_id()"
+    stamped = (
+        df.repartitionByRange(F.expr(order))
+        .sortWithinPartitions(F.expr(order))
+        .selectExpr(
+            "*",
+            f"CAST(shiftright({mid}, 33) AS INT) AS _dl_pid",
+            f"CAST({mid} & {(1 << 33) - 1} AS BIGINT) AS _dl_local",
+        )
     )
-    sizes = stamped.groupBy("_dl_pid").agg(F.count(F.lit(1)).alias("_dl_n"))
     # one-group cumulative sum over ≤ shuffle-partition-count rows —
     # control-plane sized; the partitionBy expression is constant-valued
     # (pid % 1 == 0) but not foldable, keeping an explicit single group
     # without WindowExec's no-partition warning (a literal would be
     # optimized out of the partition spec)
-    w_off = Window.partitionBy(F.pmod(F.col("_dl_pid"), F.lit(1))).orderBy("_dl_pid")
-    offs = sizes.select(
-        "_dl_pid",
-        (F.sum("_dl_n").over(w_off) - F.col("_dl_n")).alias("_dl_off"),
+    offs = stamped.groupBy("_dl_pid").agg(
+        F.expr(
+            "sum(count(1)) OVER (PARTITION BY pmod(_dl_pid, 1) ORDER BY _dl_pid)"
+            " - count(1) AS _dl_off"
+        )
     )
-    joined = stamped.join(F.broadcast(offs), "_dl_pid")
-    slot = F.pmod(F.col("_dl_off") + F.col("_dl_local"), F.lit(total))
-    rel = F.lit(None).cast("string")
-    lo = 0
+    slot = f"pmod(_dl_off + _dl_local, {total})"
+    rel, lo = "CAST(NULL AS STRING)", 0
     for name, wt in weights.items():
         if wt:
-            rel = F.when((slot >= lo) & (slot < lo + wt), F.lit(name)).otherwise(rel)
+            rel = (
+                f"CASE WHEN {slot} >= {lo} AND {slot} < {lo + wt}"
+                f" THEN {lit(name)} ELSE {rel} END"
+            )
             lo += wt
-    return joined.withColumn("relationship", rel).drop(
-        "_dl_pid", "_dl_local", "_dl_off"
+    return stamped.join(F.broadcast(offs), "_dl_pid").selectExpr(
+        *(ident(c) for c in df.columns if c != "relationship"), f"{rel} AS relationship"
     )
 
 

@@ -125,6 +125,6 @@ def control_rate_limit(df: DataFrame, group: Column, order: Column, per_group: i
     w = Window.partitionBy(group).orderBy(order)
     return (
         df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= per_group)
+        .filter(f"__rn <= {int(per_group)}")
         .drop("__rn")
     )

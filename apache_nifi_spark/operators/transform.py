@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
+from apache_nifi_spark.sqltext import ident, lit, with_columns
+
 __all__ = [
     "update_record",
     "rename_fields",
@@ -67,11 +69,13 @@ def extract_text(
     ``patterns`` maps output column → (regex, group index).  NiFi puts the
     captures into attributes; here they are first-class typed columns.
     """
-    return df.withColumns(
+    src = ident(source_col)
+    return with_columns(
+        df,
         {
-            out: F.regexp_extract(F.col(source_col), rx, grp)
+            out: f"regexp_extract({src}, {lit(rx)}, {grp})"
             for out, (rx, grp) in patterns.items()
-        }
+        },
     )
 
 
@@ -79,7 +83,10 @@ def replace_text(
     df: DataFrame, col: str, pattern: str, replacement: str, out_col: str | None = None
 ) -> DataFrame:
     """ReplaceText (regex-replace strategy, entire-text evaluation)."""
-    return df.withColumn(out_col or col, F.regexp_replace(F.col(col), pattern, replacement))
+    return df.withColumn(
+        out_col or col,
+        F.expr(f"regexp_replace({ident(col)}, {lit(pattern)}, {lit(replacement)})"),
+    )
 
 
 def replace_text_with_mapping(
@@ -97,14 +104,15 @@ def replace_text_with_mapping(
     return df.withColumn(out_col or col, c)
 
 
-def _flatten_schema(schema: StructType, prefix: str = "", sep: str = ".") -> list[str]:
-    paths: list[str] = []
+def _flatten_schema(schema: StructType, prefix: tuple[str, ...] = ()) -> list[tuple[str, ...]]:
+    """Field-name path of every non-struct leaf."""
+    paths: list[tuple[str, ...]] = []
     for f in schema.fields:
-        name = f"{prefix}{f.name}"
+        path = (*prefix, f.name)
         if isinstance(f.dataType, StructType):
-            paths.extend(_flatten_schema(f.dataType, prefix=f"{name}{sep}", sep=sep))
+            paths.extend(_flatten_schema(f.dataType, path))
         else:
-            paths.append(name)
+            paths.append(path)
     return paths
 
 
@@ -114,21 +122,27 @@ def flatten_json(df: DataFrame, sep: str = ".") -> DataFrame:
     Arrays are left intact (NiFi's flatten mode 'keep arrays'); explode is a
     separate, row-multiplying operator (SplitRecord analog).
     """
-    paths = _flatten_schema(df.schema, sep=sep)
-    return df.select([F.col(p.replace(sep, ".")).alias(p) for p in paths])
+    return df.selectExpr(
+        *(
+            f"{'.'.join(map(ident, path))} AS {ident(sep.join(path))}"
+            for path in _flatten_schema(df.schema)
+        )
+    )
 
 
 def attributes_to_json(df: DataFrame, cols: Sequence[str], out_col: str = "json") -> DataFrame:
     """AttributesToJSON: serialize selected columns into one JSON string."""
-    return df.withColumn(out_col, F.to_json(F.struct(*[F.col(c) for c in cols])))
+    return df.withColumn(
+        out_col, F.expr(f"to_json(struct({', '.join(map(ident, cols))}))")
+    )
 
 
 def evaluate_json_path(
     df: DataFrame, json_col: str, paths: Mapping[str, str]
 ) -> DataFrame:
     """EvaluateJsonPath: JSONPath extraction into columns (attributes)."""
-    return df.withColumns(
-        {out: F.get_json_object(F.col(json_col), p) for out, p in paths.items()}
+    return with_columns(
+        df, {out: f"get_json_object({ident(json_col)}, {lit(p)})" for out, p in paths.items()}
     )
 
 
@@ -157,8 +171,8 @@ def attributes_to_csv(
     delimited line, in the caller's column order (NiFi's ``Attribute List``
     ordering).  Nulls render as empty fields, matching NiFi's
     ``Null Value`` default of empty-string."""
-    fields = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols]
-    return df.withColumn(out_col, F.concat_ws(sep, *fields))
+    fields = ", ".join(f"coalesce(CAST({ident(c)} AS STRING), '')" for c in cols)
+    return df.withColumn(out_col, F.expr(f"concat_ws({lit(sep)}, {fields})"))
 
 
 def filter_attributes(
@@ -190,7 +204,7 @@ def convert_character_set(
     ``src`` charset bytes to ``dst``.  ``encode`` → ``decode`` round-trips
     through ``BinaryType`` entirely JVM-side."""
     return df.withColumn(
-        out_col or col, F.decode(F.encode(F.col(col), src), dst)
+        out_col or col, F.expr(f"decode(encode({ident(col)}, {lit(src)}), {lit(dst)})")
     )
 
 

@@ -17,6 +17,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from apache_nifi_spark.sqltext import ident
+
 __all__ = [
     "enforce_order",
     "rolling_window",
@@ -32,8 +34,10 @@ def enforce_order(
     """EnforceOrder: assign a dense per-group sequence by the order column
     (NiFi holds out-of-order FlowFiles; batch Spark simply sorts within the
     partition window)."""
-    w = Window.partitionBy(group).orderBy(F.col(order).asc())
-    return df.withColumn(out_col, F.row_number().over(w))
+    return df.withColumn(
+        out_col,
+        F.expr(f"row_number() OVER (PARTITION BY {ident(group)} ORDER BY {ident(order)} ASC)"),
+    )
 
 
 def rolling_window(

@@ -65,15 +65,21 @@ work across *processor* boundaries, something NiFi's FlowFile-at-a-time
 runtime cannot do.  At 100 TB the imported flow runs exactly like a
 hand-written pipeline (broadcast lookups, pushed-down routes), because it
 *is* one.
+
+Expressions are built as Spark SQL text (``selectExpr``, ``filter("<sql>")``,
+``F.expr``), so a processor reaches the JVM in about one DataFrame call per
+output instead of three py4j round trips per ``F.*`` Column builder; every
+property value and column name enters that text through ``sqltext``.
 """
 
 from __future__ import annotations
 
 import contextvars
 import json
+import uuid
 from collections import defaultdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: active counter sink for the compile in progress (run_flow(counters=...)):
@@ -85,6 +91,7 @@ _ACTIVE_COUNTERS: contextvars.ContextVar[dict | None] = contextvars.ContextVar(
 
 from apache_nifi_spark import io
 from apache_nifi_spark.functions.el_parser import compile_el, el_predicate
+from apache_nifi_spark.sqltext import ident, lit, with_columns
 
 __all__ = ["run_flow", "run_flow_json", "FlowImportError"]
 
@@ -269,6 +276,8 @@ def _run_flow_inner(
         return branch.get(src)
 
     outputs: dict[str, dict[str, DataFrame]] = {}
+    # one row-count Column serves every provenance Observation
+    rows = F.expr("count(1) AS rows") if provenance is not None else None
     for pid in order:
         proc = procs[pid]
         tags = {t for src, rel in incoming.get(pid, []) if (t := _tag(src, rel))}
@@ -304,8 +313,6 @@ def _run_flow_inner(
         if provenance is not None:
             # hop accounting: one Observation per output relationship —
             # the provenance-repository analog at aggregate grain
-            from pyspark.sql import Observation
-
             ptype_short = proc.get("type", "").rsplit(".", 1)[-1]
             etype = (
                 "CREATE" if not incoming.get(pid)
@@ -313,14 +320,10 @@ def _run_flow_inner(
                 else "SEND" if ptype_short == "OutputPort"
                 else "ROUTE"
             )
-            import uuid as _uuid
-
             instrumented = {}
             for rel, rel_df in outputs[pid].items():
-                obs = Observation(f"prov_{pid}_{rel}_{_uuid.uuid4().hex[:8]}")
-                instrumented[rel] = rel_df.observe(
-                    obs, F.count(F.lit(1)).alias("rows")
-                )
+                obs = Observation(f"prov_{pid}_{rel}_{uuid.uuid4().hex[:8]}")
+                instrumented[rel] = rel_df.observe(obs, rows)
                 provenance[(procs[pid].get("name") or pid, rel)] = (etype, obs)
             outputs[pid] = instrumented
 
@@ -504,6 +507,17 @@ def _dynamic(props: dict, ptype: str) -> dict:
     return {k: v for k, v in (props or {}).items() if k not in static}
 
 
+#: newline, whitespace-run and CRLF patterns as SQL literals
+_NL = lit("\n")
+_WS = lit(r"\s+")
+_CRLF = lit("\r\n")
+
+
+def _others(df: DataFrame, col: str) -> list[str]:
+    """Every column but ``col``, as SQL identifiers."""
+    return [ident(c) for c in df.columns if c != col]
+
+
 def _apply(
     spark: SparkSession,
     sf_dir: str,
@@ -530,14 +544,12 @@ def _apply(
 
     if ptype == "GenerateRecord":
         n = int(props.get("Number of Records", "100"))
-        base = spark.range(0, n).select(F.col("id").alias("rec_id"))
-        h = F.md5(F.concat(F.lit("gr:"), F.col("rec_id").cast("string")))
+        h = "md5(concat('gr:', CAST(id AS STRING)))"
         return {
-            "success": base.select(
-                "rec_id",
-                (F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % 10000)
-                .alias("amount"),
-                F.substring(h, 9, 8).alias("token"),
+            "success": spark.range(0, n).selectExpr(
+                "id AS rec_id",
+                f"CAST(conv(substring({h}, 1, 8), 16, 10) AS BIGINT) % 10000 AS amount",
+                f"substring({h}, 9, 8) AS token",
             )
         }
 
@@ -607,15 +619,12 @@ def _apply(
         return {"success": el_select(df, exprs)}
 
     if ptype == "QueryRecord":
-        out: dict[str, DataFrame] = {}
-        for rel, sql_text in _dynamic(props, ptype).items():
-            # spark.sql analyzes eagerly, so the view binding is captured
-            # per-statement — later FLOWFILE rebinds don't disturb it.
-            df.createOrReplaceTempView("FLOWFILE")
-            out[rel] = spark.sql(sql_text)
-        if not out:
+        from apache_nifi_spark.operators.route import query_record
+
+        queries = _dynamic(props, ptype)
+        if not queries:
             raise FlowImportError(f"{name}: QueryRecord needs SQL properties")
-        return out
+        return query_record(spark, df, queries)
 
     if ptype == "LookupRecord":
         table = props.get("Lookup Table")
@@ -661,8 +670,8 @@ def _apply(
         )
         if rx is None:
             raise FlowImportError(f"{name}: {ptype} needs a regex property")
-        matched = df.filter(F.col(col).rlike(rx))
-        return {"matched": matched, "unmatched": df.filter(~F.col(col).rlike(rx))}
+        hit = f"{ident(col)} RLIKE {lit(rx)}"
+        return {"matched": df.filter(hit), "unmatched": df.filter(f"NOT ({hit})")}
 
     if ptype == "DistributeLoad":
         from apache_nifi_spark.operators.route import distribute_load
@@ -679,7 +688,7 @@ def _apply(
             )
         routed = distribute_load(df, weights, order)
         return {
-            rel: routed.filter(F.col("relationship") == rel).drop("relationship")
+            rel: routed.filter(f"relationship = {lit(rel)}").drop("relationship")
             for rel in weights
         }
 
@@ -698,12 +707,9 @@ def _apply(
         # attribute NiFi's RetryFlowFile maintains.
         attempt = int(props.get("_unroll_attempt", "1"))
         kmax = int(props.get("Maximum Retries", "3"))
-        counted = df.withColumn("flowfile.retries", F.lit(attempt).cast("int"))
+        counted = with_columns(df, {"flowfile.retries": f"CAST({attempt} AS INT)"})
         if attempt <= kmax:
-            return {
-                "retry": counted,
-                "retries_exceeded": counted.filter(F.lit(False)),
-            }
+            return {"retry": counted, "retries_exceeded": counted.filter("FALSE")}
         return {"retries_exceeded": counted}
 
     if ptype == "TransformXml":
@@ -727,8 +733,8 @@ def _apply(
             raise FlowImportError(f"{name}: ValidateJson needs 'Schema Text'")
         out_df = validate_json(df, json.loads(schema_text), doc_col=col)
         return {
-            "valid": out_df.filter(F.col("valid")).drop("valid", "validation_error"),
-            "invalid": out_df.filter(~F.col("valid")).drop("valid"),
+            "valid": out_df.filter("valid").drop("valid", "validation_error"),
+            "invalid": out_df.filter("NOT valid").drop("valid"),
         }
 
     if ptype == "GeohashRecord":
@@ -751,17 +757,16 @@ def _apply(
         return {"success": parse_cef(df, content_col=col)}
 
     if ptype == "CountText":
-        col = props.get("Column", "text")
-        body = F.col(col)
-        lines = F.split(body, "\n", -1)
-        words = F.filter(F.split(body, r"\s+", -1), lambda t: t != "")
+        body = ident(props.get("Column", "text"))
         return {
-            "success": df.withColumns(
+            "success": with_columns(
+                df,
                 {
-                    "text.line.count": F.size(lines).cast("int"),
-                    "text.word.count": F.size(words).cast("int"),
-                    "text.character.count": F.length(body).cast("int"),
-                }
+                    "text.line.count": f"CAST(size(split({body}, {_NL}, -1)) AS INT)",
+                    "text.word.count": f"CAST(size(filter(split({body}, {_WS}, -1),"
+                    " t -> t != '')) AS INT)",
+                    "text.character.count": f"CAST(length({body}) AS INT)",
+                },
             )
         }
 
@@ -769,10 +774,9 @@ def _apply(
         col = props.get("Record Path") or props.get("Fork Path")
         if not col:
             raise FlowImportError(f"{name}: ForkRecord needs 'Record Path'")
-        keep = [c for c in df.columns if c != col]
         return {
-            "fork": df.select(
-                *keep, F.posexplode(F.col(col)).alias("pos", "element")
+            "fork": df.selectExpr(
+                *_others(df, col), f"posexplode({ident(col)}) AS (pos, element)"
             )
         }
 
@@ -829,16 +833,12 @@ def _apply(
         # a named counter.  Spark-first: an Observation aggregate rides
         # the plan's action — zero extra passes/shuffles; the counter is
         # rows × delta of whatever actually flows.
-        from pyspark.sql import Observation
-
         cname = props.get("Counter Name")
         if not cname:
             raise FlowImportError(f"{name}: UpdateCounter needs 'Counter Name'")
         delta = int(props.get("Delta", "1"))
-        import uuid as _uuid
-
-        obs = Observation(f"counter_{cname}_{_uuid.uuid4().hex[:8]}")
-        out = df.observe(obs, F.coalesce(F.sum(F.lit(delta)), F.lit(0)).alias("value"))
+        obs = Observation(f"counter_{cname}_{uuid.uuid4().hex[:8]}")
+        out = df.observe(obs, F.expr(f"coalesce(sum({delta}), 0) AS value"))
         sink = _ACTIVE_COUNTERS.get()
         if sink is not None:
             sink.setdefault(cname, []).append(obs)
@@ -1044,11 +1044,11 @@ def _apply(
 
     if ptype == "SplitText":
         col = props.get("Column", "text")
-        lines = F.split(F.col(col), "\n", -1)
         return {
-            "splits": df.select(
-                "*", F.posexplode(lines).alias("fragment_index", "line")
-            ).drop(col)
+            "splits": df.selectExpr(
+                *_others(df, col),
+                f"posexplode(split({ident(col)}, {_NL}, -1)) AS (fragment_index, line)",
+            )
         }
 
     if ptype == "SplitContent":
@@ -1058,41 +1058,42 @@ def _apply(
             raise FlowImportError(f"{name}: SplitContent needs 'Byte Sequence'")
         import re as _re
 
-        parts = F.split(F.col(col), _re.escape(seq), -1)
+        parts = f"split({ident(col)}, {lit(_re.escape(seq))}, -1)"
         return {
-            "splits": df.select(
-                "*", F.posexplode(parts).alias("fragment_index", "fragment")
-            ).drop(col)
+            "splits": df.selectExpr(
+                *_others(df, col), f"posexplode({parts}) AS (fragment_index, fragment)"
+            )
         }
 
     if ptype == "SegmentContent":
         col = props.get("Column", "content")
         size = int(props.get("Segment Size", "1024"))
-        n_seg = F.ceil(F.length(F.col(col)) / F.lit(size)).cast("int")
-        idx = F.sequence(F.lit(0), F.greatest(n_seg, F.lit(1)) - 1)
+        c = ident(col)
+        n_seg = f"CAST(ceil(length({c}) / {size}) AS INT)"
+        indexed = df.selectExpr(
+            "*", f"explode(sequence(0, greatest({n_seg}, 1) - 1)) AS segment_index"
+        )
         return {
-            "segments": df.select(
-                "*", F.explode(idx).alias("segment_index")
-            ).withColumn(
-                "segment",
-                F.expr(f"substring({col}, segment_index * {size} + 1, {size})"),
-            ).drop(col)
+            "segments": indexed.selectExpr(
+                *_others(df, col),
+                "segment_index",
+                f"substring({c}, segment_index * {size} + 1, {size}) AS segment",
+            )
         }
 
     # ------------------------------------------------- record plumbing ---
     if ptype == "ConvertRecord":
         fmt = (props.get("Record Writer Format") or "json").lower()
+        cols = [ident(c) for c in df.columns]
         if fmt == "json":
-            out = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+            out = f"to_json(struct({', '.join(cols)}))"
         elif fmt == "csv":
-            out = F.concat_ws(
-                ",", *[F.col(c).cast("string") for c in df.columns]
-            )
+            out = f"concat_ws(',', {', '.join(f'CAST({c} AS STRING)' for c in cols)})"
         else:
             raise FlowImportError(
                 f"{name}: ConvertRecord writer {fmt!r} not in scoped import"
             )
-        return {"success": df.withColumn("content", out)}
+        return {"success": with_columns(df, {"content": out})}
 
     if ptype == "PartitionRecord":
         from apache_nifi_spark.operators.aggregate import partition_record
@@ -1171,14 +1172,12 @@ def _apply(
         return {"success": flatten_json(df)}
 
     if ptype == "EvaluateJsonPath":
-        col = props.get("Column", "content")
-        derived = {
-            out: F.get_json_object(F.col(col), path)
-            for out, path in _dynamic(props, ptype).items()
-        }
-        if not derived:
+        from apache_nifi_spark.operators.transform import evaluate_json_path
+
+        paths = _dynamic(props, ptype)
+        if not paths:
             raise FlowImportError(f"{name}: EvaluateJsonPath needs JSONPath properties")
-        return {"matched": df.withColumns(derived)}
+        return {"matched": evaluate_json_path(df, props.get("Column", "content"), paths)}
 
     if ptype == "AttributesToJSON":
         from apache_nifi_spark.operators.transform import attributes_to_json
@@ -1241,51 +1240,53 @@ def _apply(
         col = props.get("Column", "content")
         enc = props.get("Encoding", "base64")
         mode = props.get("Mode", "encode")
-        c = F.col(col)
+        c = ident(col)
         if enc == "base64":
             # Spark's base64 may emit MIME-chunked output (CRLF every 76
             # chars, SPARK-47307); strip to canonical RFC 4648 form.
             out = (
-                F.regexp_replace(F.base64(c.cast("binary")), "\r\n", "")
+                f"regexp_replace(base64(CAST({c} AS BINARY)), {_CRLF}, '')"
                 if mode == "encode"
-                else F.unbase64(c).cast("string")
+                else f"CAST(unbase64({c}) AS STRING)"
             )
         elif enc in ("hex", "base16"):
             out = (
-                F.hex(c.cast("binary"))
+                f"hex(CAST({c} AS BINARY))"
                 if mode == "encode"
-                else F.unhex(c).cast("string")
+                else f"CAST(unhex({c}) AS STRING)"
             )
         else:
             raise FlowImportError(f"{name}: unsupported encoding {enc!r}")
-        return {"success": df.withColumn(col, out)}
+        return {"success": with_columns(df, {col: out})}
 
     if ptype in ("CryptographicHashContent", "HashContent", "HashAttribute"):
         col = props.get("Column", "content")
         algo = props.get("Hash Algorithm", "SHA-256").upper().replace("-", "")
-        c = F.col(col).cast("binary")
+        c = f"CAST({ident(col)} AS BINARY)"
         if algo == "MD5":
-            out = F.md5(c)
+            out = f"md5({c})"
         elif algo in ("SHA256", "SHA512", "SHA224", "SHA384"):
-            out = F.sha2(c, int(algo[3:]))
+            out = f"sha2({c}, {int(algo[3:])})"
         else:
             raise FlowImportError(f"{name}: unsupported hash {algo!r}")
         dest = props.get("Hash Attribute", f"{col}_hash")
-        return {"success": df.withColumn(dest, out)}
+        return {"success": with_columns(df, {dest: out})}
 
     if ptype == "ModifyBytes":
         col = props.get("Column", "content")
         start = int(props.get("Start Offset", "0"))
         end = int(props.get("End Offset", "0"))
-        c = F.col(col).cast("binary")
-        keep = F.greatest(F.length(c) - F.lit(start + end), F.lit(0))
+        b = f"CAST({ident(col)} AS BINARY)"
+        trimmed = (
+            f"CAST(substring({b}, {start + 1},"
+            f" greatest(octet_length({b}) - {start + end}, 0)) AS STRING)"
+        )
+        # the length is taken of the trimmed content, less the offsets again
+        trimmed_len = f"greatest(length(CAST({trimmed} AS BINARY)) - {start + end}, 0)"
         return {
-            "success": df.withColumn(
-                col, F.expr(
-                    f"substring(cast({col} as binary), {start + 1}, "
-                    f"greatest(octet_length(cast({col} as binary)) - {start + end}, 0))"
-                ).cast("string"),
-            ).withColumn(f"{col}_len", keep.cast("int"))
+            "success": with_columns(
+                df, {col: trimmed, f"{col}_len": f"CAST({trimmed_len} AS INT)"}
+            )
         }
 
     if ptype == "ConvertCharacterSet":
@@ -1330,9 +1331,9 @@ def _apply(
         regex, groups = _compile_grok(grok)
         derived = {}
         for i, (gname, cast) in enumerate(groups, start=1):
-            c = F.regexp_extract(F.col(col), regex, i)
-            derived[gname] = c.cast(cast) if cast else c
-        return {"matched": df.withColumns(derived)}
+            c = f"regexp_extract({ident(col)}, {lit(regex)}, {i})"
+            derived[gname] = f"CAST({c} AS {cast})" if cast else c
+        return {"matched": with_columns(df, derived)}
 
     if ptype == "ParseSyslog":
         from apache_nifi_spark.operators.transform import parse_syslog
@@ -1390,8 +1391,8 @@ def _apply(
         ]
         if not attr or not terms:
             raise FlowImportError(f"{name}: ScanAttribute needs 'Attribute' + 'Dictionary'")
-        hit = F.col(attr).cast("string").isin(terms)
-        return {"matched": df.filter(hit), "unmatched": df.filter(~hit)}
+        hit = f"CAST({ident(attr)} AS STRING) IN ({', '.join(map(lit, terms))})"
+        return {"matched": df.filter(hit), "unmatched": df.filter(f"NOT ({hit})")}
 
     if ptype == "ScanContent":
         col = props.get("Column", "content")
@@ -1400,11 +1401,8 @@ def _apply(
         ]
         if not terms:
             raise FlowImportError(f"{name}: ScanContent needs 'Dictionary'")
-        hit = None
-        for t in terms:
-            p = F.col(col).contains(t)
-            hit = p if hit is None else (hit | p)
-        return {"matched": df.filter(hit), "unmatched": df.filter(~hit)}
+        hit = " OR ".join(f"contains({ident(col)}, {lit(t)})" for t in terms)
+        return {"matched": df.filter(hit), "unmatched": df.filter(f"NOT ({hit})")}
 
     if ptype == "IdentifyMimeType":
         from apache_nifi_spark.llm.multimodal import identify_mime_type

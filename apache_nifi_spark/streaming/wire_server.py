@@ -19,7 +19,10 @@ they all share lives here, on the stdlib ``socketserver`` /
   idle keep-alive or raw client cannot hold a handler thread until the
   server stops;
 - daemon connection threads, a ``port`` property, and ``stop()`` —
-  ``shutdown()`` plus ``server_close()``, back within the 0.2 s poll;
+  ``shutdown()`` plus ``server_close()``.  The accept loop keeps the
+  stdlib's 0.2 s poll (idle servers wake rarely), but ``shutdown()``
+  wakes it with a self-connect, so ``stop()`` returns at once instead of
+  waiting out the poll;
 - one ``logging`` line per failed connection instead of the stdlib's
   traceback on stderr.
 
@@ -31,8 +34,10 @@ response must carry Content-Length).
 
 from __future__ import annotations
 
+import contextlib
 import http.server
 import logging
+import selectors
 import socket
 import socketserver
 import sys
@@ -64,6 +69,9 @@ class _WireServer:
     def __init__(self, handler, host: str = "127.0.0.1", port: int = 0):
         if not isinstance(handler, type):  # a raw serve(conn) callable
             self.serve_conn, handler = handler, _RawHandler
+        self._stopping = False
+        self._stopped = threading.Event()
+        self._stopped.set()
         super().__init__((host, port), handler)
 
     @property
@@ -71,8 +79,29 @@ class _WireServer:
         return self.server_address[1]
 
     def start(self):
-        threading.Thread(target=self.serve_forever, args=(0.2,), daemon=True).start()
+        self._stopped.clear()
+        threading.Thread(target=self.serve_forever, daemon=True).start()
         return self
+
+    def serve_forever(self, poll_interval: float = 0.2) -> None:
+        """The stdlib accept loop, ended by ``shutdown``'s wake."""
+        try:
+            with selectors.PollSelector() as sel:
+                sel.register(self, selectors.EVENT_READ)
+                while not self._stopping:
+                    if sel.select(poll_interval) and not self._stopping:
+                        self._handle_request_noblock()
+        finally:
+            self._stopped.set()
+
+    def shutdown(self) -> None:
+        """Ends the accept loop without waiting out its poll: a self-connect
+        wakes it, and the loop exits without accepting that connection, so
+        no handler (nor a ``tls.wrap_listener`` handshake) runs for it."""
+        self._stopping = True
+        with contextlib.suppress(OSError):
+            socket.create_connection(self.server_address[:2], timeout=1).close()
+        self._stopped.wait()
 
     def stop(self) -> None:
         """After ``start()``: ends the accept loop, closes the listener."""

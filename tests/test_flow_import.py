@@ -812,3 +812,57 @@ def test_remote_process_group_https_unpinned_verifies_system_ca(spark, sf_dir):
     finally:
         httpd.shutdown()
         httpd.server_close()
+
+
+def test_concurrent_compiles_bind_their_own_views(spark, sf_dir):
+    """QueryRecord binds its input as the temp view FLOWFILE, and the
+    JoinEnrichment SQL strategy binds ``original``/``enrichment``; temp
+    views are session-global and REST compiles run concurrently, so each
+    compile must still plan over its own input."""
+    import sys
+    import threading
+
+    conn = {"source": {"id": "in"}, "selectedRelationships": ["success"]}
+    flow = {
+        "flowContents": {
+            "inputPorts": [{"identifier": "in", "name": "in"}],
+            "processors": [
+                {"identifier": "q", "name": "Q", "type": "x.QueryRecord",
+                 "properties": {"out": "SELECT tag FROM FLOWFILE"}},
+                {"identifier": "f", "name": "F", "type": "x.ForkEnrichment"},
+                {"identifier": "j", "name": "J", "type": "x.JoinEnrichment",
+                 "properties": {"SQL": "SELECT o.tag, e.tag AS etag"
+                                " FROM original o CROSS JOIN enrichment e"}},
+            ],
+            "connections": [
+                dict(conn, destination={"id": "q"}),
+                dict(conn, destination={"id": "f"}),
+                {"source": {"id": "f"}, "destination": {"id": "j"},
+                 "selectedRelationships": ["original", "enrichment"]},
+            ],
+        }
+    }
+    wrong, done = [], []
+
+    def worker(base):
+        for tag in range(base, base + 40):
+            src = spark.range(1).selectExpr(f"{tag} AS tag")
+            outs = run_flow(spark, sf_dir, flow, port_sources={"in": src})
+            got = (outs["Q.out"].first()["tag"], tuple(outs["J.joined"].first()))
+            if got != (tag, (tag, tag)):
+                wrong.append((tag, got))
+            done.append(tag)
+
+    threads = [threading.Thread(target=worker, args=(k * 1000,)) for k in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(done) == 80
+    assert not wrong, f"{len(wrong)} of 80 compiles planned over another input: {wrong[:5]}"

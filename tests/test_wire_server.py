@@ -205,6 +205,47 @@ def test_idle_owner_connection_is_dropped(name, tmp_path, monkeypatch):
         stop()
 
 
+# ------------------------------------------------------------------- stop ---
+
+
+def test_stop_wakes_the_accept_loop(tmp_path, caplog):
+    """``stop()`` returns at once instead of waiting out the 0.2 s poll,
+    and the self-connect that wakes the loop reaches no handler: no log
+    line, not even from a TLS-wrapped listener's handshake."""
+    import statistics
+    import types
+
+    from apache_nifi_spark.streaming.tls import (
+        generate_self_signed,
+        server_context,
+        wrap_listener,
+    )
+
+    ctx = server_context(*generate_self_signed(str(tmp_path / "tls")))
+    served = []
+
+    def make(i):
+        if i % 3 == 0:
+            return wire_server.HttpServer(wire_server.HttpHandler)
+        srv = wire_server.TcpServer(served.append)
+        if i % 3 == 2:
+            wrap_listener(types.SimpleNamespace(_srv=srv), ctx)
+        return srv
+
+    before = _server_threads()
+    took = []
+    with caplog.at_level(logging.DEBUG):
+        for i in range(20):
+            srv = make(i).start()
+            t0 = time.perf_counter()
+            srv.stop()
+            took.append(time.perf_counter() - t0)
+        assert _wait(lambda: not (_server_threads() - before))
+    assert statistics.median(took) < 0.02, took
+    assert not served
+    assert not caplog.records, [r.getMessage() for r in caplog.records]
+
+
 # ----------------------------------------------------------------- guard ---
 
 _SERVER_CLASSES = {"ThreadingHTTPServer", "ThreadingTCPServer", "HTTPServer",
