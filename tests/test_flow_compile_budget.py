@@ -2,8 +2,8 @@
 
 Processors build their expressions as Spark SQL text, so each one reaches
 the JVM in a few DataFrame calls instead of three round trips per ``F.*``
-Column builder.  The budgets are half of what the Column-built compiler
-made (1,995 plain, 2,963 with counters and provenance).
+Column builder.  The budgets are about half of what the Column-built
+compiler made (1,995 plain, 2,963 with counters and provenance).
 """
 
 from __future__ import annotations
