@@ -92,9 +92,6 @@ def publish_amqp_wire_q(spark, sf_dir):
     drains the landing dir and applies the ``region.*.u1`` TOPIC BINDING
     exactly as the exchange routes (streaming/amqp_bus.binding_matches),
     aggregating value-exact."""
-    import glob as _glob
-    import time as _time
-
     from apache_nifi_spark.streaming.amqp_bus import binding_matches
     from apache_nifi_spark.streaming.amqp_wire import MiniAmqpBroker, publish_amqp
 
@@ -118,17 +115,7 @@ def publish_amqp_wire_q(spark, sf_dir):
         sent = publish_amqp(msgs, "127.0.0.1", broker.port, "events", "rkey", "payload")
         n_sent = sent.filter("published").count()
         assert n_sent == ev.count()
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            landed = sum(
-                sum(1 for ln in open(p, "rb") if ln.strip())
-                for p in _glob.glob(f"{landing}/*")
-            )
-            if landed >= n_sent:
-                break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(f"broker landed {landed} of {n_sent}")
+        broker.landing.wait(n_sent)
     finally:
         broker.stop()
     back = spark.read.text(landing).select(
@@ -162,9 +149,6 @@ def publish_mqtt_wire_q(spark, sf_dir):
     landing dir and applies the ``sensors/+/u1`` topic FILTER exactly as
     ConsumeMQTT's subscription does (functions/selectors), aggregating
     value-exact — frame encode → wire → land → filter is lossless."""
-    import glob as _glob
-    import time as _time
-
     from apache_nifi_spark.functions.selectors import mqtt_topic_matches
     from apache_nifi_spark.streaming.mqtt import MiniMqttBroker, publish_mqtt
 
@@ -188,17 +172,7 @@ def publish_mqtt_wire_q(spark, sf_dir):
         sent = publish_mqtt(msgs, "127.0.0.1", broker.port, "topic", "payload")
         n_sent = sent.filter("published").count()
         assert n_sent == ev.count()
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            landed = sum(
-                sum(1 for ln in open(p, "rb") if ln.strip())
-                for p in _glob.glob(f"{landing}/*")
-            )
-            if landed >= n_sent:
-                break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError(f"broker landed {landed} of {n_sent}")
+        broker.landing.wait(n_sent)
     finally:
         broker.stop()
     back = spark.read.text(landing).select(
@@ -649,10 +623,8 @@ def put_slack_webhook_post_q(spark, sf_dir):
     landing listener standing in for hooks.slack.com), which lands each
     body durably; the landed JSON parses back and must aggregate
     value-exact — the render+transport hop is lossless.  All 200s are
-    asserted (operators/http.post_http)."""
-    import glob as _glob
-    import time as _time
-
+    asserted (operators/http.post_http); the listener lands each body
+    before its 200, so the 200 count is the landed count."""
     from apache_nifi_spark.operators.http import post_http
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.streaming.listen import HttpLandingListener
@@ -674,11 +646,6 @@ def put_slack_webhook_post_q(spark, sf_dir):
         sent = post_http(bodies, lst.url + "services/hook", "payload")
         n_ok = sent.filter(F.col("status") == 200).count()
         assert n_ok == ev.count()
-        deadline = _time.monotonic() + 15
-        while _time.monotonic() < deadline:
-            if len(_glob.glob(f"{landing}/*")) >= n_ok:
-                break
-            _time.sleep(0.05)
     # explicit schema: inference would re-read every landed one-body
     # file a second time
     back = spark.read.schema("channel string, text string").json(landing)

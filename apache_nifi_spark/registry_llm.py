@@ -3101,9 +3101,6 @@ def put_syslog_udp_q(spark, sf_dir):
     (syslog's native transport — sinks/socket.put_udp), land via
     UdpLandingListener, and parse back.  Oracle equality proves
     render → datagram → land → parse is lossless."""
-    import glob
-    import time
-
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.sinks import put_udp
     from apache_nifi_spark.streaming.listen import UdpLandingListener
@@ -3122,18 +3119,11 @@ def put_syslog_udp_q(spark, sf_dir):
     )
     landing = session_dir(spark, "putsyslog")
     listener = UdpLandingListener(landing, batch_size=1)
-    n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} datagrams")
+    try:
+        n_sent = put_udp(lines, "127.0.0.1", listener.port, "content").filter("sent").count()
+        listener.landing.wait(n_sent)
+    finally:
+        listener.stop()
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3157,9 +3147,6 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
     connection per partition (sinks/socket.put_tcp_octet_counted), land
     through the frame parser (TcpLandingListener framing='octet'), and
     parse back.  Oracle equality proves the framed hop is lossless."""
-    import glob
-    import time
-
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.sinks import put_tcp_octet_counted
     from apache_nifi_spark.streaming.listen import TcpLandingListener
@@ -3178,23 +3165,16 @@ def put_syslog_tcp_octet_q(spark, sf_dir):
     )
     landing = session_dir(spark, "syslogtcp")
     listener = TcpLandingListener(landing, framing="octet")
-    n_sent = (
-        put_tcp_octet_counted(lines, "127.0.0.1", listener.port, "content")
-        .filter("sent")
-        .count()
-    )
-    assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
+    try:
+        n_sent = (
+            put_tcp_octet_counted(lines, "127.0.0.1", listener.port, "content")
+            .filter("sent")
+            .count()
         )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} messages")
+        assert n_sent == ev.count()
+        listener.landing.wait(n_sent)
+    finally:
+        listener.stop()
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3218,9 +3198,6 @@ def put_relp_roundtrip_q(spark, sf_dir):
     connection per partition, each ACK awaited), land batched, and parse
     back.  Oracle equality proves the ACKed hop is lossless
     (streaming/relp.py)."""
-    import glob
-    import time
-
     from apache_nifi_spark.operators import parse_syslog, render_syslog_3164
     from apache_nifi_spark.streaming.relp import RelpLandingListener, put_relp
 
@@ -3238,23 +3215,16 @@ def put_relp_roundtrip_q(spark, sf_dir):
     )
     landing = session_dir(spark, "relp")
     listener = RelpLandingListener(landing)
-    n_sent = (
-        put_relp(lines, "127.0.0.1", listener.port, "content")
-        .filter("sent")
-        .count()
-    )
-    assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
+    try:
+        n_sent = (
+            put_relp(lines, "127.0.0.1", listener.port, "content")
+            .filter("sent")
+            .count()
         )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} messages")
+        assert n_sent == ev.count()
+        listener.landing.wait(n_sent)
+    finally:
+        listener.stop()
     parsed = parse_syslog(spark.read.text(landing).withColumnRenamed("value", "line"))
     return parsed.select("facility", "severity", "host", "tag", "pid", "message")
 
@@ -3424,26 +3394,16 @@ def put_tcp_roundtrip_q(spark, sf_dir):
     )
     landing = session_dir(spark, "puttcp")
     listener = TcpLandingListener(landing)
-    sent = put_tcp(lines, "127.0.0.1", listener.port, "content")
-    n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
-    assert n_sent == ev.count()
-    # sendall returning doesn't mean the handler thread has landed the
-    # file yet — poll the landing zone until every line is durable (the
-    # at-least-once handoff a real landing tier gives the drain).
-    import glob
-    import time
-
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} lines")
+    try:
+        sent = put_tcp(lines, "127.0.0.1", listener.port, "content")
+        n_sent = sent.filter("sent").count()  # the sink action; all-or-nothing per partition
+        assert n_sent == ev.count()
+        # sendall returning doesn't mean the handler thread has landed the
+        # file yet — wait until every line is durable (the at-least-once
+        # handoff a real landing tier gives the drain).
+        listener.landing.wait(n_sent)
+    finally:
+        listener.stop()
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -3473,9 +3433,6 @@ def put_tls_roundtrip_q(spark, sf_dir):
     verified (streaming/tls.py) — before any byte ships; plaintext
     clients are rejected at the handshake (tests/test_tls.py).  Oracle
     equality proves the encrypted hop is lossless."""
-    import glob
-    import time
-
     from apache_nifi_spark.sinks import put_tcp
     from apache_nifi_spark.streaming.listen import TcpLandingListener
     from apache_nifi_spark.streaming.tls import (
@@ -3493,24 +3450,17 @@ def put_tls_roundtrip_q(spark, sf_dir):
             F.col("value").cast("string"),
         ).alias("content")
     )
-    cert, key = generate_self_signed()
+    cert, key = generate_self_signed(session_dir(spark, "tls"))
     landing = session_dir(spark, "puttls")
     listener = TcpLandingListener(landing)
     wrap_listener(listener, server_context(cert, key))
-    sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
-    n_sent = sent.filter("sent").count()
-    assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
-        )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} lines")
+    try:
+        sent = put_tcp(lines, "127.0.0.1", listener.port, "content", tls_cert=cert)
+        n_sent = sent.filter("sent").count()
+        assert n_sent == ev.count()
+        listener.landing.wait(n_sent)
+    finally:
+        listener.stop()
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(
@@ -3663,9 +3613,6 @@ def listen_smtp_q(spark, sf_dir):
     headers alongside the MIME fields) — the prior envelope-regex
     projection + self-join on subject double-scanned the content and
     paid a join exchange for columns the parser already had in hand."""
-    import glob
-    import time
-
     from apache_nifi_spark.sinks import wire
     from apache_nifi_spark.sources.email_codec import parse_email_headers
     from apache_nifi_spark.streaming.smtp import put_smtp
@@ -3707,15 +3654,10 @@ def listen_smtp_q(spark, sf_dir):
     ).repartition(pool, "to_addr")
     srv = _staged_smtp(spark, sf_dir)
     srv.landing_dir = landing = session_dir(spark, "smtp")
+    # the server lands each message before its 250, and sendmail raises
+    # on anything else: every delivered message is already on disk
     n = put_smtp(rendered, "127.0.0.1", srv.port).filter("delivered").count()
     assert n == n_msgs
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        if len(glob.glob(f"{landing}/*.eml")) >= n:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError("landing zone incomplete")
     from apache_nifi_spark.sources import read_binary_files
 
     landed = (
@@ -4259,9 +4201,6 @@ def put_websocket_roundtrip_q(spark, sf_dir):
     durably; the landing zone reads back and aggregates.  Oracle
     equality proves handshake → mask → frame → land is lossless
     (streaming/websocket.py)."""
-    import glob
-    import time
-
     from apache_nifi_spark.streaming.websocket import (
         WebSocketLandingServer,
         put_websocket,
@@ -4278,23 +4217,16 @@ def put_websocket_roundtrip_q(spark, sf_dir):
     )
     landing = session_dir(spark, "putws")
     server = WebSocketLandingServer(landing)
-    n_sent = (
-        put_websocket(lines, "127.0.0.1", server.port, "content")
-        .filter("sent")
-        .count()
-    )
-    assert n_sent == ev.count()
-    deadline = time.monotonic() + 15
-    while time.monotonic() < deadline:
-        landed = sum(
-            sum(1 for ln in open(p, "rb").read().splitlines() if ln.strip())
-            for p in glob.glob(f"{landing}/*")
+    try:
+        n_sent = (
+            put_websocket(lines, "127.0.0.1", server.port, "content")
+            .filter("sent")
+            .count()
         )
-        if landed >= n_sent:
-            break
-        time.sleep(0.05)
-    else:
-        raise TimeoutError(f"landing zone has {landed} of {n_sent} messages")
+        assert n_sent == ev.count()
+        server.landing.wait(n_sent)
+    finally:
+        server.stop()
     back = spark.read.text(landing)
     rec = back.select(
         F.from_csv(

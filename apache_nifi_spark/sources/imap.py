@@ -32,7 +32,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner, nodelay
 
 __all__ = ["MiniImapServer", "append_imap", "list_imap_ids", "consume_imap",
            "MiniPop3Server", "consume_pop3"]
@@ -142,7 +142,7 @@ def _connect(host: str, port: int, user: str, password: str):
     client = imaplib.IMAP4(host, port)
     # imaplib never sets NODELAY; per-message round-trips would
     # otherwise stall ~40 ms each under Nagle + delayed ACK.
-    client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+    nodelay(client.sock)
     client.login(user, password)
     client.select("INBOX")
     return client
@@ -163,7 +163,7 @@ def append_imap(
         import imaplib
 
         client = imaplib.IMAP4(host, port)
-        client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        nodelay(client.sock)
         client.login(user, password)
         try:
             for pdf in batches:
@@ -348,7 +348,7 @@ def consume_pop3(
         import poplib
 
         client = poplib.POP3(host, port, timeout=10)
-        client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        nodelay(client.sock)
         client.user(user)
         client.pass_(password)
         try:

@@ -31,14 +31,18 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 import socket
 import struct
 import threading
-import uuid
 from typing import Any
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = ["bson_encode", "bson_decode", "MiniMongoServer", "MongoWireClient"]
 
@@ -151,17 +155,10 @@ def _op_msg(request_id: int, response_to: int, body: dict) -> bytes:
     return header + payload
 
 
-def _read_exact(sock_file, n: int) -> bytes:
-    data = sock_file.read(n)
-    if data is None or len(data) < n:
-        raise ConnectionError("short read")
-    return data
-
-
 def _read_op_msg(sock_file) -> tuple[int, dict]:
-    header = _read_exact(sock_file, 16)
+    header = read_exact(sock_file, 16)
     length, request_id, _resp_to, opcode = struct.unpack("<iiii", header)
-    rest = _read_exact(sock_file, length - 16)
+    rest = read_exact(sock_file, length - 16)
     if opcode != _OP_MSG:
         raise ValueError(f"unsupported opcode {opcode}")
     # flagBits (4) + section kind byte (1) + body document
@@ -180,7 +177,7 @@ class MiniMongoServer(WireOwner):
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".json")
         self._store: dict[str, list[dict]] = {}
         self._lock = threading.Lock()
         self._srv = TcpServer(self._serve, host, port).start()
@@ -210,7 +207,14 @@ class MiniMongoServer(WireOwner):
             with self._lock:
                 self._store.setdefault(coll, []).extend(docs)
             for d in docs:
-                self._land(coll, d)
+                rec = {
+                    k: (v.hex() if isinstance(v, bytes) else v)
+                    for k, v in d.items()
+                }
+                self.landing.land(
+                    json.dumps(rec, separators=(",", ":"), default=str).encode(),
+                    prefix=f"{coll}__",
+                )
             return {"n": len(docs), "ok": 1.0}
         if kind == "find":
             coll = cmd["find"]
@@ -239,17 +243,6 @@ class MiniMongoServer(WireOwner):
             return {"ok": 1.0}
         return {"ok": 0.0, "errmsg": f"unsupported command {kind!r}"}
 
-    def _land(self, coll: str, doc: dict) -> None:
-        rec = {
-            k: (v.hex() if isinstance(v, bytes) else v)
-            for k, v in doc.items()
-        }
-        name = f"{coll}__{uuid.uuid4().hex}.json"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(rec, separators=(",", ":"), default=str))
-        os.rename(tmp, os.path.join(self.landing_dir, name))
-
 
 # ---------------------------------------------------------------- client ---
 
@@ -258,8 +251,7 @@ class MongoWireClient:
     """One wire connection (the per-partition client)."""
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
         self._f = self._sock.makefile("rwb")
         self._req = 0
 

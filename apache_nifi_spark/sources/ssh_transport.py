@@ -45,7 +45,12 @@ from apache_nifi_spark.sources.ssh_crypto import (
     x25519,
     x25519_keypair,
 )
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = ["SshServer", "SshClientConnection", "make_host_key"]
 
@@ -180,29 +185,20 @@ class _Transport:
         self.f.flush()
         self.seq_out += 1
 
-    def _read_exact(self, n: int) -> bytes:
-        buf = b""
-        while len(buf) < n:
-            chunk = self.f.read(n - len(buf))
-            if not chunk:
-                raise ConnectionError("short read in SSH packet")
-            buf += chunk
-        return buf
-
     def recv_packet(self) -> bytes:
         block = 16 if self.enc_in else 8
-        head = self._read_exact(block)
+        head = read_exact(self.f, block)
         if self.enc_in is not None:
             head = self.enc_in.crypt(head)
         (plen,) = struct.unpack(">I", head[:4])
         if not 1 <= plen <= (1 << 20):
             raise ValueError(f"bad SSH packet length {plen}")
-        rest = self._read_exact(plen - (block - 4))
+        rest = read_exact(self.f, plen - (block - 4))
         if self.enc_in is not None:
             rest = self.enc_in.crypt(rest)
         packet = head + rest
         if self.enc_in is not None:
-            mac = self._read_exact(32)
+            mac = read_exact(self.f, 32)
             want = _hmac.new(
                 self.mac_in, struct.pack(">I", self.seq_in) + packet, hashlib.sha256
             ).digest()
@@ -475,8 +471,7 @@ class SshClientConnection:
         subsystem: str,
         timeout: float = 30.0,
     ):
-        sock = socket.create_connection((host, port), timeout=timeout)
-        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        sock = dial(host, port, timeout)
         self.t = _Transport(sock)
         t = self.t
         v_s = t.exchange_versions()

@@ -29,13 +29,16 @@ broker tier is swappable for a real deployment, the frames are not.
 
 from __future__ import annotations
 
-import os
 import socket
 import struct
-import threading
-import uuid
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing, escape_landed
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = ["MiniAmqpBroker", "publish_amqp"]
 
@@ -66,17 +69,10 @@ def _method(channel: int, cls: int, meth: int, args: bytes = b"") -> bytes:
     return _frame(_FRAME_METHOD, channel, struct.pack(">HH", cls, meth) + args)
 
 
-def _read_exact(f, n: int) -> bytes:
-    data = f.read(n)
-    if data is None or len(data) < n:
-        raise ConnectionError("short read")
-    return data
-
-
 def _read_frame(f) -> tuple[int, int, bytes]:
-    ftype, channel, size = struct.unpack(">BHI", _read_exact(f, 7))
-    payload = _read_exact(f, size)
-    if _read_exact(f, 1)[0] != _FRAME_END:
+    ftype, channel, size = struct.unpack(">BHI", read_exact(f, 7))
+    payload = read_exact(f, size)
+    if read_exact(f, 1)[0] != _FRAME_END:
         raise ValueError("missing frame-end octet")
     return ftype, channel, payload
 
@@ -92,9 +88,7 @@ class MiniAmqpBroker(WireOwner):
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".log")
         self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
@@ -103,7 +97,7 @@ class MiniAmqpBroker(WireOwner):
         pending: dict | None = None  # publish awaiting header/body
         delivery_tag = 0
         try:
-            if _read_exact(f, 8) != _PROTO_HEADER:
+            if read_exact(f, 8) != _PROTO_HEADER:
                 f.write(_PROTO_HEADER)  # spec: answer with supported version
                 return
             # Connection.Start: ver 0.9, empty server-properties table,
@@ -175,7 +169,7 @@ class MiniAmqpBroker(WireOwner):
             pass
         finally:
             if batch:
-                self._land(batch)
+                self.landing.land_lines(batch)
             try:
                 f.close()
             except OSError:
@@ -183,12 +177,7 @@ class MiniAmqpBroker(WireOwner):
             conn.close()
 
     def _complete(self, f, channel, pending, batch, delivery_tag) -> int:
-        esc = (
-            pending["body"]
-            .replace(b"\\", b"\\\\")
-            .replace(b"\n", b"\\n")
-            .replace(b"\t", b"\\t")
-        )
+        esc = escape_landed(pending["body"]).replace(b"\t", b"\\t")
         batch.append(
             pending["exchange"].encode() + b"\t"
             + pending["rkey"].encode() + b"\t" + esc
@@ -199,21 +188,10 @@ class MiniAmqpBroker(WireOwner):
         f.flush()
         return delivery_tag
 
-    def _land(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.log"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(lines) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
-
 
 class _AmqpClient:
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
         self._f = self._sock.makefile("rwb")
         self._tag = 0
         self._f.write(_PROTO_HEADER)

@@ -49,7 +49,12 @@ import struct
 import threading
 import zlib
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = ["MiniKafkaBroker", "publish_kafka_wire", "consume_kafka_wire"]
 
@@ -302,16 +307,6 @@ def _parse_message_set(buf: bytes) -> list[tuple[int, bytes | None, bytes | None
     return out
 
 
-def _read_exact(f, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = f.read(n - len(buf))
-        if not chunk:
-            raise ConnectionError("short read")
-        buf += chunk
-    return buf
-
-
 class MiniKafkaBroker(WireOwner):
     """Single-node broker speaking ApiVersions, Metadata v0,
     Produce v0/v3, and Fetch v0/v4 (v2 RecordBatches + gzip)."""
@@ -341,7 +336,7 @@ class MiniKafkaBroker(WireOwner):
                 if not head or len(head) < 4:
                     break
                 (size,) = struct.unpack(">i", head)
-                frame = _read_exact(f, size)
+                frame = read_exact(f, size)
                 cur = _Cursor(frame)
                 api_key, api_version = cur.i16(), cur.i16()
                 correlation_id = cur.i32()
@@ -556,8 +551,7 @@ class MiniKafkaBroker(WireOwner):
 
 class _KafkaClient:
     def __init__(self, host: str, port: int, client_id: str, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
         self._f = self._sock.makefile("rwb", buffering=1 << 16)
         self._client_id = client_id
         self._corr = 0
@@ -572,8 +566,8 @@ class _KafkaClient:
         frame = header + body
         self._f.write(struct.pack(">i", len(frame)) + frame)
         self._f.flush()
-        (size,) = struct.unpack(">i", _read_exact(self._f, 4))
-        resp = _Cursor(_read_exact(self._f, size))
+        (size,) = struct.unpack(">i", read_exact(self._f, 4))
+        resp = _Cursor(read_exact(self._f, size))
         corr = resp.i32()
         if corr != self._corr:
             raise ConnectionError(f"correlation id mismatch {corr} != {self._corr}")

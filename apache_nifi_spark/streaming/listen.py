@@ -40,62 +40,98 @@ from apache_nifi_spark.streaming.wire_server import (
 
 __all__ = [
     "HttpLandingListener",
+    "Landing",
     "TcpLandingListener",
     "UdpLandingListener",
+    "escape_landed",
     "stream_json_landing",
     "unescape_landed",
 ]
 
 
+def escape_landed(message: bytes) -> bytes:
+    """The injective landing escape for a one-message-per-line landing
+    file: ``\\`` → ``\\\\`` first, then newline → ``\\n``, so a message
+    with embedded newlines still lands as one line."""
+    return message.replace(b"\\", b"\\\\").replace(b"\n", b"\\n")
+
+
 def unescape_landed(line: str) -> str:
-    """Invert the injective landing escape shared by the octet-framing
-    TCP listener and the RELP listener (``\\`` → ``\\\\`` first, then
-    newline → ``\\n``): one landed line = one wire message, with any
-    embedded newlines/backslashes recoverable.  Splitting on the escaped
-    backslash keeps a literal ``\\n`` byte pair distinct from an escaped
-    newline.  Spark-side equivalent of this helper:
+    """Invert ``escape_landed``: one landed line = one wire message, with
+    any embedded newlines/backslashes recoverable.  Splitting on the
+    escaped backslash keeps a literal ``\\n`` byte pair distinct from an
+    escaped newline.  Spark-side equivalent of this helper:
     ``F.replace(F.replace(col, lit('\\\\n'), lit('\\n')), ...)`` is NOT
     injective — use this in a batch-parse UDF only if payloads may embed
     newlines; plain syslog lines never do."""
     return "\\".join(p.replace("\\n", "\n") for p in line.split("\\\\"))
 
 
-class HttpLandingListener:
-    """Threaded HTTP server writing one landing file per POST body.
+class Landing:
+    """One landing zone: the directory the streaming file source drains.
 
-    Files are written to ``<landing_dir>/<seq>_<uuid>.json`` via a
-    temp-name + ``os.rename`` so the streaming file source never sees a
-    half-written file (the landing-zone atomicity contract).
+    Each ``land`` writes one file named
+    ``<prefix><seq:08d>_<uuid8><suffix>``: ``seq`` is the arrival
+    sequence (taken under a lock, so concurrent connections never share
+    one), the uuid keeps names unique across owners sharing a directory.
+    The body goes to a dot-prefixed temp name first and appears through
+    ``os.rename``, so the file source — which skips dot files — never
+    reads half a file.  Owners count the records each file carries, and
+    ``wait`` blocks on that in-process count instead of re-reading the
+    directory."""
+
+    def __init__(self, directory: str, suffix: str):
+        os.makedirs(directory, exist_ok=True)
+        self.dir = directory
+        self.suffix = suffix
+        self._seq = 0
+        self._landed = 0
+        self._cond = threading.Condition()
+
+    def land(self, body: bytes, records: int = 1, prefix: str = "") -> None:
+        with self._cond:
+            self._seq += 1
+            seq = self._seq
+        name = f"{prefix}{seq:08d}_{uuid.uuid4().hex[:8]}{self.suffix}"
+        tmp = os.path.join(self.dir, f".tmp_{name}")
+        with open(tmp, "wb") as f:
+            f.write(body)
+        os.rename(tmp, os.path.join(self.dir, name))
+        with self._cond:
+            self._landed += records
+            self._cond.notify_all()
+
+    def land_lines(self, lines: list[bytes], prefix: str = "") -> None:
+        """One file of newline-terminated lines, one record per line."""
+        self.land(b"\n".join(lines) + b"\n", len(lines), prefix)
+
+    def wait(self, n: int, timeout: float = 15.0) -> None:
+        """Return once ``n`` records have landed; ``TimeoutError`` if
+        fewer have after ``timeout`` seconds."""
+        with self._cond:
+            if not self._cond.wait_for(lambda: self._landed >= n, timeout):
+                raise TimeoutError(f"landed {self._landed} of {n}")
+
+
+class HttpLandingListener:
+    """Threaded HTTP server writing one ``Landing`` file per POST body
+    (``<seq>_<uuid>.json``); the 200 goes out after the file is in place.
     """
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        listener = self
+        self.landing = landing = Landing(landing_dir, ".json")
 
         class Handler(HttpHandler):
             def do_POST(self):  # noqa: N802 (stdlib API name)
                 length = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(length)
-                listener._land(body)
+                landing.land(self.rfile.read(length))
                 self.send_response(200)
                 self.send_header("Content-Length", "2")
                 self.end_headers()
                 self.wfile.write(b"ok")
 
         self._server = HttpServer(Handler, host, port)
-        self._seq = 0
-        self._lock = threading.Lock()
-
-    def _land(self, body: bytes) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.json"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as f:
-            f.write(body)
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
     @property
     def url(self) -> str:
@@ -127,9 +163,8 @@ def stream_json_landing(
 
 class TcpLandingListener(WireOwner):
     """ListenTCP / ListenSyslog transport half: a threaded TCP server
-    appending each record batch as one landing file — the same durable
-    landing-zone contract as `HttpLandingListener` (atomic temp-name +
-    rename per connection's payload).
+    landing each connection's payload as one ``Landing`` file (one
+    record per line), the landing-zone contract of `HttpLandingListener`.
 
     ``framing`` selects the syslog-over-TCP transport mode (RFC 6587):
     ``"newline"`` (non-transparent framing, the default) lands the byte
@@ -148,8 +183,7 @@ class TcpLandingListener(WireOwner):
         if framing not in ("newline", "octet"):
             raise ValueError(f"unknown framing {framing!r}")
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        listener = self
+        self.landing = landing = Landing(landing_dir, ".log")
 
         class Handler(socketserver.StreamRequestHandler):
             def handle(self):
@@ -173,26 +207,12 @@ class TcpLandingListener(WireOwner):
                             break
                         msgs.append(data[sp + 1 : sp + 1 + n])
                         pos = sp + 1 + n
-                    # Injective landing encoding: escape the escape char
-                    # first so payloads containing literal "\n" sequences
-                    # remain losslessly recoverable.
-                    data = b"\n".join(
-                        m.replace(b"\\", b"\\\\").replace(b"\n", b"\\n")
-                        for m in msgs
-                    )
+                    data = b"\n".join(escape_landed(m) for m in msgs)
                 if data.strip():
-                    listener._land(data)
+                    body = data if data.endswith(b"\n") else data + b"\n"
+                    landing.land(body, body.count(b"\n"))
 
-        self._seq = 0
         self._srv = TcpServer(Handler, host, port).start()
-
-    def _land(self, body: bytes) -> None:
-        self._seq += 1
-        name = f"{self._seq:06d}_{uuid.uuid4().hex}.log"
-        tmp = os.path.join(self.landing_dir, f".{name}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(body if body.endswith(b"\n") else body + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
 
 class UdpLandingListener:
@@ -201,8 +221,8 @@ class UdpLandingListener:
 
     NiFi's ListenUDP batches datagrams into FlowFiles via Max Batch Size;
     ``batch_size`` mirrors that — datagrams buffer in arrival order and
-    flush to ONE newline-delimited landing file per batch (atomic
-    temp-name + rename, same contract as the TCP/HTTP listeners).
+    flush to ONE newline-delimited ``Landing`` file per batch, one
+    record per datagram.
     ``flush()`` drains a partial batch (NiFi's batching window close);
     ``stop()`` flushes implicitly so no datagram is ever dropped.
 
@@ -229,10 +249,9 @@ class UdpLandingListener:
         import socket as _socket
 
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".log")
         self.batch_size = max(1, batch_size)
         self._buf: list[bytes] = []
-        self._seq = 0
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._sock = _socket.socket(_socket.AF_INET, _socket.SOCK_DGRAM)
@@ -271,16 +290,9 @@ class UdpLandingListener:
                 self._flush_locked()
 
     def _flush_locked(self) -> None:
-        if not self._buf:
-            return
-        self._seq += 1
-        body = b"\n".join(self._buf) + b"\n"
-        self._buf = []
-        name = f"{self._seq:06d}_{uuid.uuid4().hex}.log"
-        tmp = os.path.join(self.landing_dir, f".{name}.tmp")
-        with open(tmp, "wb") as f:
-            f.write(body)
-        os.rename(tmp, os.path.join(self.landing_dir, name))
+        if self._buf:
+            self.landing.land_lines(self._buf)
+            self._buf = []
 
     def flush(self) -> None:
         with self._lock:

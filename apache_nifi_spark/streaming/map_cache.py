@@ -37,7 +37,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = ["MapCacheServer", "MapCacheClient", "put_map_cache", "fetch_map_cache"]
 
@@ -53,24 +58,14 @@ def _write_bytes(sock: socket.socket, b: bytes) -> None:
     sock.sendall(struct.pack(">I", len(b)) + b)
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("peer closed mid-frame")
-        buf += chunk
-    return buf
+def _read_utf(f) -> str:
+    (n,) = struct.unpack(">H", read_exact(f, 2))
+    return read_exact(f, n).decode("utf-8")
 
 
-def _read_utf(sock: socket.socket) -> str:
-    (n,) = struct.unpack(">H", _read_exact(sock, 2))
-    return _read_exact(sock, n).decode("utf-8")
-
-
-def _read_bytes(sock: socket.socket) -> bytes:
-    (n,) = struct.unpack(">I", _read_exact(sock, 4))
-    return _read_exact(sock, n)
+def _read_bytes(f) -> bytes:
+    (n,) = struct.unpack(">I", read_exact(f, 4))
+    return read_exact(f, n)
 
 
 class MapCacheServer(WireOwner):
@@ -86,22 +81,23 @@ class MapCacheServer(WireOwner):
             return dict(self._data)
 
     def _serve(self, conn: socket.socket) -> None:
+        rf = conn.makefile("rb")
         try:
             # handshake: client sends its protocol version, server ACKs.
-            (ver,) = struct.unpack(">I", _read_exact(conn, 4))
+            (ver,) = struct.unpack(">I", read_exact(rf, 4))
             if ver != _PROTOCOL_VERSION:
                 conn.sendall(struct.pack(">b", 0))
                 return
             conn.sendall(struct.pack(">b", 1))
             while True:
-                op = _read_utf(conn)
+                op = _read_utf(rf)
                 if op == "put":
-                    k, v = _read_bytes(conn), _read_bytes(conn)
+                    k, v = _read_bytes(rf), _read_bytes(rf)
                     with self._lock:
                         self._data[k] = v
                     conn.sendall(struct.pack(">b", 1))
                 elif op == "get":
-                    k = _read_bytes(conn)
+                    k = _read_bytes(rf)
                     with self._lock:
                         v = self._data.get(k)
                     if v is None:
@@ -110,12 +106,12 @@ class MapCacheServer(WireOwner):
                         conn.sendall(struct.pack(">b", 1))
                         _write_bytes(conn, v)
                 elif op == "containsKey":
-                    k = _read_bytes(conn)
+                    k = _read_bytes(rf)
                     with self._lock:
                         hit = k in self._data
                     conn.sendall(struct.pack(">b", 1 if hit else 0))
                 elif op == "remove":
-                    k = _read_bytes(conn)
+                    k = _read_bytes(rf)
                     with self._lock:
                         hit = self._data.pop(k, None) is not None
                     conn.sendall(struct.pack(">b", 1 if hit else 0))
@@ -132,6 +128,7 @@ class MapCacheServer(WireOwner):
         except (ConnectionError, OSError, struct.error):
             return
         finally:
+            rf.close()
             conn.close()
 
 
@@ -139,10 +136,10 @@ class MapCacheClient:
     """One connection, many operations (the per-partition client)."""
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
+        self._rf = self._sock.makefile("rb")
         self._sock.sendall(struct.pack(">I", _PROTOCOL_VERSION))
-        (ok,) = struct.unpack(">b", _read_exact(self._sock, 1))
+        (ok,) = struct.unpack(">b", read_exact(self._rf, 1))
         if ok != 1:
             raise ConnectionError("cache protocol version rejected")
 
@@ -150,34 +147,35 @@ class MapCacheClient:
         _write_utf(self._sock, "put")
         _write_bytes(self._sock, key)
         _write_bytes(self._sock, value)
-        _read_exact(self._sock, 1)
+        read_exact(self._rf, 1)
 
     def get(self, key: bytes) -> bytes | None:
         _write_utf(self._sock, "get")
         _write_bytes(self._sock, key)
-        (hit,) = struct.unpack(">b", _read_exact(self._sock, 1))
-        return _read_bytes(self._sock) if hit else None
+        (hit,) = struct.unpack(">b", read_exact(self._rf, 1))
+        return _read_bytes(self._rf) if hit else None
 
     def contains_key(self, key: bytes) -> bool:
         _write_utf(self._sock, "containsKey")
         _write_bytes(self._sock, key)
-        return _read_exact(self._sock, 1) == b"\x01"
+        return read_exact(self._rf, 1) == b"\x01"
 
     def remove(self, key: bytes) -> bool:
         _write_utf(self._sock, "remove")
         _write_bytes(self._sock, key)
-        return _read_exact(self._sock, 1) == b"\x01"
+        return read_exact(self._rf, 1) == b"\x01"
 
     def key_set(self) -> list[bytes]:
         _write_utf(self._sock, "keySet")
-        (n,) = struct.unpack(">I", _read_exact(self._sock, 4))
-        return [_read_bytes(self._sock) for _ in range(n)]
+        (n,) = struct.unpack(">I", read_exact(self._rf, 4))
+        return [_read_bytes(self._rf) for _ in range(n)]
 
     def close(self) -> None:
         try:
             _write_utf(self._sock, "close")
         except OSError:
             pass
+        self._rf.close()
         self._sock.close()
 
 

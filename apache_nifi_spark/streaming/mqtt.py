@@ -23,13 +23,17 @@ echo are all real framing, unit-tested against adversarial payloads.
 
 from __future__ import annotations
 
-import os
 import socket
 import struct
-import threading
 import uuid
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing, escape_landed
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = ["MiniMqttBroker", "publish_mqtt"]
 
@@ -68,13 +72,6 @@ def _mqtt_str(s: str) -> bytes:
     return struct.pack(">H", len(b)) + b
 
 
-def _read_exact(f, n: int) -> bytes:
-    data = f.read(n)
-    if data is None or len(data) < n:
-        raise ConnectionError("short read")
-    return data
-
-
 def _packet(ptype: int, flags: int, body: bytes) -> bytes:
     return bytes([(ptype << 4) | flags]) + _encode_varint(len(body)) + body
 
@@ -84,9 +81,7 @@ class MiniMqttBroker(WireOwner):
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".log")
         self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
@@ -98,7 +93,7 @@ class MiniMqttBroker(WireOwner):
                 if not head:
                     break
                 ptype, flags = head[0] >> 4, head[0] & 0x0F
-                body = _read_exact(f, _read_varint(f))
+                body = read_exact(f, _read_varint(f))
                 if ptype == _CONNECT:
                     (nlen,) = struct.unpack_from(">H", body, 0)
                     proto = body[2 : 2 + nlen].decode()
@@ -118,11 +113,7 @@ class MiniMqttBroker(WireOwner):
                         (pid,) = struct.unpack_from(">H", body, pos)
                         pos += 2
                     payload = body[pos:]
-                    esc = (
-                        payload.replace(b"\\", b"\\\\")
-                        .replace(b"\n", b"\\n")
-                        .replace(b"\t", b"\\t")
-                    )
+                    esc = escape_landed(payload).replace(b"\t", b"\\t")
                     batch.append(topic.encode("utf-8") + b"\t" + esc)
                     if qos == 1 and pid is not None:
                         f.write(_packet(_PUBACK, 0, struct.pack(">H", pid)))
@@ -136,28 +127,17 @@ class MiniMqttBroker(WireOwner):
             pass
         finally:
             if batch:
-                self._land(batch)
+                self.landing.land_lines(batch)
             try:
                 f.close()
             except OSError:
                 pass
             conn.close()
 
-    def _land(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.log"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(lines) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
-
 
 class _MqttClient:
     def __init__(self, host: str, port: int, client_id: str, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
         self._f = self._sock.makefile("rwb")
         self._pid = 0
         body = (
@@ -169,8 +149,8 @@ class _MqttClient:
         )
         self._f.write(_packet(_CONNECT, 0, body))
         self._f.flush()
-        head = _read_exact(self._f, 1)
-        rest = _read_exact(self._f, _read_varint(self._f))
+        head = read_exact(self._f, 1)
+        rest = read_exact(self._f, _read_varint(self._f))
         if head[0] >> 4 != _CONNACK or rest[1] != 0:
             raise ConnectionError(f"CONNACK refused: {rest!r}")
 
@@ -179,8 +159,8 @@ class _MqttClient:
         body = _mqtt_str(topic) + struct.pack(">H", self._pid) + payload
         self._f.write(_packet(_PUBLISH, 0x02, body))  # QoS1
         self._f.flush()
-        head = _read_exact(self._f, 1)
-        rest = _read_exact(self._f, _read_varint(self._f))
+        head = read_exact(self._f, 1)
+        rest = read_exact(self._f, _read_varint(self._f))
         if head[0] >> 4 != _PUBACK or struct.unpack(">H", rest[:2])[0] != self._pid:
             raise ConnectionError("PUBACK mismatch")
 

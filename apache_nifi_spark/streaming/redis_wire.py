@@ -33,7 +33,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner, dial
 
 __all__ = [
     "MiniRedisServer",
@@ -195,8 +195,7 @@ class RedisClient:
     """Minimal RESP2 client with request pipelining."""
 
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
         self._rd = _Reader(self._sock)
 
     def command(self, *parts: bytes):

@@ -23,16 +23,14 @@ collectors in front); the landing dir feeds the streaming drain.
 
 from __future__ import annotations
 
-import os
 import socket
-import threading
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing, escape_landed
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner, dial
 
 __all__ = ["RelpLandingListener", "put_relp"]
 
@@ -80,10 +78,8 @@ class RelpLandingListener(WireOwner):
         batch_size: int = 64,
     ):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
+        self.landing = Landing(landing_dir, ".log")
         self.batch_size = max(1, batch_size)
-        self._seq = 0
-        self._lock = threading.Lock()
         self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
@@ -97,12 +93,10 @@ class RelpLandingListener(WireOwner):
                     f.write(_frame(txnr, "rsp", b"200 OK\n" + data))
                     f.flush()
                 elif cmd == "syslog":
-                    # Injective landing escape — same contract as the
-                    # octet-framing TCP listener; invert with
-                    # streaming.listen.unescape_landed.
-                    buf.append(data.replace(b"\\", b"\\\\").replace(b"\n", b"\\n"))
+                    # invert with streaming.listen.unescape_landed
+                    buf.append(escape_landed(data))
                     if len(buf) >= self.batch_size:
-                        self._land(buf)
+                        self.landing.land_lines(buf)
                         buf = []
                     f.write(_frame(txnr, "rsp", b"200 OK"))
                     f.flush()
@@ -117,22 +111,12 @@ class RelpLandingListener(WireOwner):
             return
         finally:
             if buf:
-                self._land(buf)
+                self.landing.land_lines(buf)
             try:
                 f.close()
             except OSError:
                 pass
             conn.close()
-
-    def _land(self, messages: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.log"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(messages) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
 
 def put_relp(
@@ -147,8 +131,7 @@ def put_relp(
     ``sent`` reflects the server's 200 response."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sock = socket.create_connection((host, port), timeout=timeout)
-        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        sock = dial(host, port, timeout)
         f = sock.makefile("rwb")
         txnr = 1
         ok = True

@@ -7,7 +7,7 @@ environment has no MTA, so ``MiniSmtpServer`` implements the server
 subset a delivery needs: greeting, EHLO/HELO (capability list), MAIL
 FROM / RCPT TO envelope, DATA with dot-stuffing termination and
 transparency decoding, RSET/NOOP/QUIT.  Each completed DATA lands as
-one file (atomic temp + rename) with an ``X-Envelope-From`` /
+one ``Landing`` file with an ``X-Envelope-From`` /
 ``X-Envelope-To`` prefix so the envelope survives alongside the
 headers, as the NiFi processor exposes it.
 
@@ -19,29 +19,34 @@ listeners.
 
 from __future__ import annotations
 
-import os
 import socket
-import threading
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner, nodelay
 
 __all__ = ["MiniSmtpServer", "put_smtp"]
 
 
 class MiniSmtpServer(WireOwner):
-    """Threaded RFC 5321 subset server landing one file per message."""
+    """Threaded RFC 5321 subset server landing one file per message,
+    before its 250 reply."""
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
         self._srv = TcpServer(self._serve, host, port).start()
+
+    @property
+    def landing_dir(self) -> str:
+        return self.landing.dir
+
+    @landing_dir.setter
+    def landing_dir(self, path: str) -> None:
+        """A staged server lands each run into its own directory."""
+        self.landing = Landing(path, ".eml")
 
     def _serve(self, conn: socket.socket) -> None:
         f = conn.makefile("rwb")
@@ -110,18 +115,11 @@ class MiniSmtpServer(WireOwner):
             conn.close()
 
     def _land(self, mail_from: str, rcpt_to: list[str], body: bytes) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
         envelope = (
             f"X-Envelope-From: {mail_from}\r\n"
             f"X-Envelope-To: {', '.join(rcpt_to)}\r\n"
         ).encode()
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.eml"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(envelope + body)
-        os.rename(tmp, os.path.join(self.landing_dir, name))
+        self.landing.land(envelope + body)
 
 
 def put_smtp(
@@ -139,7 +137,7 @@ def put_smtp(
         import smtplib
 
         client = smtplib.SMTP(host, port, timeout=10)
-        client.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        nodelay(client.sock)
         try:
             for pdf in batches:
                 ok = []

@@ -31,12 +31,11 @@ executors; consumption is a splittable scan of the landing files.
 from __future__ import annotations
 
 import json
-import os
 import socket
-import threading
 import uuid
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing
+from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner, dial
 
 __all__ = ["MiniStompBroker", "publish_stomp"]
 
@@ -137,9 +136,7 @@ class MiniStompBroker(WireOwner):
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".jsonl")
         self._srv = TcpServer(self._serve, host, port).start()
 
     def _serve(self, conn: socket.socket) -> None:
@@ -191,7 +188,7 @@ class MiniStompBroker(WireOwner):
                     # land BEFORE the receipt: once the client sees it,
                     # every prior SEND is durably on disk
                     if batch:
-                        self._land(batch)
+                        self.landing.land_lines(batch)
                         batch = []
                     if receipt is not None:
                         f.write(_frame("RECEIPT", {"receipt-id": receipt}))
@@ -207,28 +204,17 @@ class MiniStompBroker(WireOwner):
             pass
         finally:
             if batch:
-                self._land(batch)
+                self.landing.land_lines(batch)
             try:
                 f.close()
             except OSError:
                 pass
             conn.close()
 
-    def _land(self, lines: list[bytes]) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.jsonl"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as fh:
-            fh.write(b"\n".join(lines) + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
-
 
 class _StompClient:
     def __init__(self, host: str, port: int, timeout: float = 10.0):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
-        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+        self._sock = dial(host, port, timeout)
         self._f = self._sock.makefile("rwb", buffering=1 << 16)
         self._f.write(
             _frame("CONNECT", {"accept-version": "1.2", "host": host})

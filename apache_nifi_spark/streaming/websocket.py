@@ -12,9 +12,8 @@ exact bytes:
   connections, performs the server handshake, reassembles fragmented
   messages, answers ping with pong, enforces the RFC's client-masking
   rule (unmasked client frame → close 1002), and lands each complete
-  message as one durable landing-zone file (temp-name + rename, the
-  same atomicity contract every listener in this package gives the
-  streaming drain).
+  message as one ``Landing`` file (the landing-zone contract every
+  listener in this package gives the streaming drain).
 - ``put_websocket`` — the PutWebSocket analog: ``mapInPandas`` with ONE
   client connection per PARTITION (handshake amortized across the
   batch, partitions fan out across executors — the PutTCP/InvokeHTTP
@@ -34,14 +33,18 @@ import hashlib
 import os
 import socket
 import struct
-import threading
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from apache_nifi_spark.streaming.wire_server import TcpServer, WireOwner
+from apache_nifi_spark.streaming.listen import Landing
+from apache_nifi_spark.streaming.wire_server import (
+    TcpServer,
+    WireOwner,
+    dial,
+    read_exact,
+)
 
 __all__ = [
     "ws_accept_key",
@@ -87,28 +90,18 @@ def encode_frame(
     return head + payload
 
 
-def _read_exact(sock: socket.socket, n: int) -> bytes:
-    buf = b""
-    while len(buf) < n:
-        chunk = sock.recv(n - len(buf))
-        if not chunk:
-            raise ConnectionError("socket closed mid-frame")
-        buf += chunk
-    return buf
-
-
-def decode_frame(sock: socket.socket) -> tuple[bool, int, bool, bytes]:
-    """Read one frame off a socket → (fin, opcode, was_masked, payload),
-    unmasking if needed."""
-    b0, b1 = _read_exact(sock, 2)
+def decode_frame(f) -> tuple[bool, int, bool, bytes]:
+    """Read one frame off a socket's ``makefile("rb")`` → (fin, opcode,
+    was_masked, payload), unmasking if needed."""
+    b0, b1 = read_exact(f, 2)
     fin, opcode = bool(b0 & 0x80), b0 & 0x0F
     masked, n = bool(b1 & 0x80), b1 & 0x7F
     if n == 126:
-        (n,) = struct.unpack(">H", _read_exact(sock, 2))
+        (n,) = struct.unpack(">H", read_exact(f, 2))
     elif n == 127:
-        (n,) = struct.unpack(">Q", _read_exact(sock, 8))
-    key = _read_exact(sock, 4) if masked else b""
-    payload = _read_exact(sock, n)
+        (n,) = struct.unpack(">Q", read_exact(f, 8))
+    key = read_exact(f, 4) if masked else b""
+    payload = read_exact(f, n)
     if masked:
         payload = bytes(b ^ key[i % 4] for i, b in enumerate(payload))
     return fin, opcode, masked, payload
@@ -120,17 +113,16 @@ class WebSocketLandingServer(WireOwner):
 
     def __init__(self, landing_dir: str, host: str = "127.0.0.1", port: int = 0):
         self.landing_dir = landing_dir
-        os.makedirs(landing_dir, exist_ok=True)
-        self._seq = 0
-        self._lock = threading.Lock()
+        self.landing = Landing(landing_dir, ".msg")
         self._srv = TcpServer(self._serve_conn, host, port).start()
 
     def _serve_conn(self, conn: socket.socket) -> None:
+        rf = conn.makefile("rb")
         try:
             self._handshake(conn)
             parts: list[bytes] = []
             while True:
-                fin, opcode, masked, payload = decode_frame(conn)
+                fin, opcode, masked, payload = decode_frame(rf)
                 if opcode in (0x1, 0x2, 0x0):
                     if not masked:  # RFC 6455 §5.1: client MUST mask
                         conn.sendall(
@@ -139,7 +131,7 @@ class WebSocketLandingServer(WireOwner):
                         return
                     parts.append(payload)
                     if fin:
-                        self._land(b"".join(parts))
+                        self.landing.land(b"".join(parts) + b"\n")
                         parts = []
                 elif opcode == 0x9:  # ping → pong, same payload
                     conn.sendall(encode_frame(payload, opcode=0xA))
@@ -149,6 +141,7 @@ class WebSocketLandingServer(WireOwner):
         except (ConnectionError, OSError, ValueError):
             return
         finally:
+            rf.close()
             conn.close()
 
     def _handshake(self, conn: socket.socket) -> None:
@@ -174,16 +167,6 @@ class WebSocketLandingServer(WireOwner):
             b"Connection: Upgrade\r\n"
             b"Sec-WebSocket-Accept: " + accept.encode("ascii") + b"\r\n\r\n"
         )
-
-    def _land(self, message: bytes) -> None:
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        name = f"{seq:08d}_{uuid.uuid4().hex[:8]}.msg"
-        tmp = os.path.join(self.landing_dir, f".tmp_{name}")
-        with open(tmp, "wb") as f:
-            f.write(message + b"\n")
-        os.rename(tmp, os.path.join(self.landing_dir, name))
 
 
 def _client_handshake(sock: socket.socket, host: str, port: int) -> None:
@@ -220,8 +203,7 @@ def put_websocket(
     partition, close handshake on drain; appends ``sent``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sock = socket.create_connection((host, port), timeout=timeout)
-        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)  # r17
+        sock = dial(host, port, timeout)
         ok = True
         try:
             _client_handshake(sock, host, port)
@@ -250,7 +232,8 @@ def put_websocket(
                     sock.sendall(
                         encode_frame(struct.pack(">H", 1000), opcode=0x8, mask=os.urandom(4))
                     )
-                    decode_frame(sock)  # server's close echo
+                    with sock.makefile("rb") as rf:
+                        decode_frame(rf)  # server's close echo
                 except (OSError, ConnectionError):
                     pass
         finally:

@@ -30,6 +30,10 @@ A raw-socket protocol passes its ``serve(conn)`` callable as the
 handler; a ``socketserver`` handler class is passed as-is, and HTTP
 handlers subclass ``HttpHandler`` (HTTP/1.1 keep-alive, so every
 response must carry Content-Length).
+
+The client side shares the same two pieces: ``dial`` connects with
+``TCP_NODELAY`` (``nodelay`` sets it on a stdlib client's socket), and
+``read_exact`` reads a fixed-size field off a binary file object.
 """
 
 from __future__ import annotations
@@ -43,13 +47,45 @@ import socketserver
 import sys
 import threading
 
-__all__ = ["IDLE_TIMEOUT_S", "HttpHandler", "HttpServer", "TcpServer", "WireOwner"]
+__all__ = [
+    "IDLE_TIMEOUT_S",
+    "HttpHandler",
+    "HttpServer",
+    "TcpServer",
+    "WireOwner",
+    "dial",
+    "nodelay",
+    "read_exact",
+]
 
 #: seconds an accepted connection may sit without a byte before the
 #: server drops it (a read past it raises ``TimeoutError``)
 IDLE_TIMEOUT_S = 60.0
 
 _log = logging.getLogger(__name__)
+
+
+def nodelay(sock: socket.socket) -> socket.socket:
+    """``TCP_NODELAY`` on ``sock`` (see the module docstring for why)."""
+    sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+    return sock
+
+
+def dial(host: str, port: int, timeout: float) -> socket.socket:
+    """A client connection with ``TCP_NODELAY`` set."""
+    return nodelay(socket.create_connection((host, port), timeout=timeout))
+
+
+def read_exact(f, n: int) -> bytes:
+    """Exactly ``n`` bytes from the binary file object ``f`` (a socket's
+    ``makefile("rb")``); ``ConnectionError`` if the peer closes first."""
+    data = f.read(n)
+    while len(data) < n:
+        more = f.read(n - len(data))
+        if not more:
+            raise ConnectionError(f"short read: {len(data)} of {n} bytes")
+        data += more
+    return data
 
 
 class _RawHandler(socketserver.BaseRequestHandler):
@@ -110,8 +146,7 @@ class _WireServer:
 
     def get_request(self):
         conn, addr = super().get_request()
-        conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-        conn.settimeout(IDLE_TIMEOUT_S)
+        nodelay(conn).settimeout(IDLE_TIMEOUT_S)
         return conn, addr
 
     def handle_error(self, request, client_address) -> None:

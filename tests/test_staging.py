@@ -163,6 +163,15 @@ def test_staging_is_the_only_owner():
                 name = getattr(node, "attr", getattr(node, "id", None))
                 if name == "mkdtemp":
                     bad.append(f"{rel}:{node.lineno} mkdtemp (use staging.session_dir)")
+                elif (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "id", getattr(node.func, "attr", None))
+                    == "generate_self_signed"
+                    and not (node.args or node.keywords)
+                ):
+                    # with no directory it makes its own anspark_tls_* mkdtemp
+                    bad.append(f"{rel}:{node.lineno} generate_self_signed() "
+                               "(pass it a staging.session_dir)")
     assert not bad, "stage through apache_nifi_spark/staging.py:\n" + "\n".join(bad)
 
 

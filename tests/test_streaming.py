@@ -341,12 +341,14 @@ def test_octet_truncated_frame_and_unescape_roundtrip():
 
     from apache_nifi_spark.streaming.listen import (
         TcpLandingListener,
+        escape_landed,
         unescape_landed,
     )
 
     # unescape inverts the escape for adversarial payloads
     for payload in ["a\\nb", "a\nb", "a\\\nb", "\\\\", "\\n\n\\"]:
-        escaped = payload.replace("\\", "\\\\").replace("\n", "\\n")
+        escaped = escape_landed(payload.encode()).decode()
+        assert "\n" not in escaped, payload
         assert unescape_landed(escaped) == payload, payload
 
     landing = tempfile.mkdtemp(prefix="octet_trunc_")

@@ -61,6 +61,7 @@ def test_frame_lengths_fragmentation_and_ping():
     server = WebSocketLandingServer(landing)
     try:
         s = _connect(server)
+        rf = s.makefile("rb")
         # 7-bit, 16-bit, 64-bit payload length classes
         s.sendall(encode_frame(b"tiny", mask=b"abcd"))
         s.sendall(encode_frame(b"x" * 300, mask=b"\x01\x02\x03\x04"))
@@ -71,7 +72,7 @@ def test_frame_lengths_fragmentation_and_ping():
         s.sendall(encode_frame(b"end", opcode=0x0, fin=True, mask=b"cccc"))
         # ping must come back as pong with the same payload
         s.sendall(encode_frame(b"hb", opcode=0x9, mask=b"dddd"))
-        fin, opcode, _, payload = decode_frame(s)
+        fin, opcode, _, payload = decode_frame(rf)
         assert (fin, opcode, payload) == (True, 0xA, b"hb")
         msgs = _landed(landing, 4)
         assert msgs[0] == b"tiny"
@@ -80,7 +81,7 @@ def test_frame_lengths_fragmentation_and_ping():
         assert msgs[3] == b"frag-mid-end"
         # close handshake echoes
         s.sendall(encode_frame(struct.pack(">H", 1000), opcode=0x8, mask=b"eeee"))
-        fin, opcode, _, _ = decode_frame(s)
+        fin, opcode, _, _ = decode_frame(rf)
         assert opcode == 0x8
         s.close()
     finally:
@@ -92,8 +93,9 @@ def test_unmasked_client_frame_closes_1002():
     server = WebSocketLandingServer(landing)
     try:
         s = _connect(server)
+        rf = s.makefile("rb")
         s.sendall(encode_frame(b"naked"))  # no mask: protocol error
-        fin, opcode, _, payload = decode_frame(s)
+        fin, opcode, _, payload = decode_frame(rf)
         assert opcode == 0x8
         assert struct.unpack(">H", payload[:2])[0] == 1002
         import glob
